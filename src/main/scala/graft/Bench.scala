@@ -10,45 +10,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // naive-micros parquet reads as TimestampType, not NTZ (see Engine)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // micros not INT96 on write: INT96 has no min/max stats (see Engine)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      // data-volume-sized initial shuffle buckets, AQE owns the final
-      // count: derived from the sf dir's on-disk size (sf0.1 → cpus,
-      // sf10 → ~220 — the 8 g sf10 OOM regime where 32 buckets put
-      // ~2^24 hash-agg keys in one task; a flat 8×cpus taxed every
-      // sf0.1 shuffle ~15% in block count — see
-      // Engine.initialShufflePartitions)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Engine.initialShufflePartitions(cpus.toInt, sfDir).toString)
-      // AQE coalesce floor 128 KiB (see Engine.session): the 1 MiB
-      // default folds sub-MiB compute-dense reduce stages to one task
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "131072"))
-      .config("spark.ui.enabled", "false")
-      // The suite compiles well over the default 100 generated-class
-      // cache entries (spark.sql.codegen.cache.maxEntries); at 100 the
-      // LRU thrashes, so each pass re-pays multi-second Janino compiles
-      // on a rotating set of queries — the "rotating JIT stall" every
-      // bench record since round 2. 4096 keeps every plan's generated
-      // class resident, so the warmup pass actually warms. (Static SQL
-      // conf: must be set before the session exists.)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // WSCG bailout aligned with HotSpot's 8000-bytecode JIT limit —
-      // un-JIT-able generated methods run interpreted, slower than the
-      // per-expression-codegen fallback (see Engine.session).
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // data-volume-sized initial shuffle buckets from the sf dir, AQE
+    // owns the final count (see Engine.initialShufflePartitions)
+    val spark = Engine.session("graft-bench", dataDir = Some(sfDir))
 
     // Spill accounting for low-memory rehearsals: task-level
     // memory/disk spill bytes summed across the whole run (spill is

@@ -30,8 +30,7 @@ object BloomProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BloomProbe <sfDir>")
     val sfDir = args(0)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-bloomprobe", cpus)
+    val spark = Engine.session("graft-bloomprobe")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

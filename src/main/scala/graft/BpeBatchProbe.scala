@@ -16,8 +16,7 @@ object BpeBatchProbe {
     val rules = if (args.length > 1) args(1).toInt else 1000
     val batch = if (args.length > 2) args(2).toInt else 32
     val seqRules = if (args.length > 3) args(3).toInt else 100
-    val spark = Engine.session("bpe-batch-probe",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = Engine.session("bpe-batch-probe")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
     val jobs = new java.util.concurrent.atomic.AtomicLong

@@ -56,7 +56,6 @@ object BucketProbe {
     require(args.nonEmpty, "usage: BucketProbe <sfDir> [numBuckets]")
     val sfDir = args(0)
     val buckets = if (args.length > 1) args(1).toInt else 32
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
     // bucket metadata lives in the session catalog; keep the warehouse
     // out of the repo tree, key it by sfDir (the LayoutProbe discipline)
     // and clean a stale copy — a leftover location from a previous run
@@ -72,7 +71,7 @@ object BucketProbe {
       rm(warehouse)
     }
     System.setProperty("spark.sql.warehouse.dir", warehouse.getAbsolutePath)
-    val spark = Engine.session("graft-bucketprobe", cpus)
+    val spark = Engine.session("graft-bucketprobe")
 
     val plainTime = bestOfTwo(() =>
       q3(Tables.lineitem(spark, sfDir), Tables.orders(spark, sfDir),

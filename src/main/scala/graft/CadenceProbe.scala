@@ -51,8 +51,7 @@ object CadenceProbe {
     // for the mid-drain kill — shrink the trigger so the kill can land
     val maxFilesPerTrigger = args.drop(2).headOption.map(_.toInt).getOrElse(8)
     require(nCycles >= 3, "need >= 3 cycles: bootstrap, a killed cycle, a clean close")
-    val spark = Engine.session("graft-cadence",
-      sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32))
+    val spark = Engine.session("graft-cadence")
     spark.sparkContext.setLogLevel("WARN")
     val base = java.nio.file.Files.createTempDirectory("graft-cadence").toString
     val dropDir = s"$base/drops"

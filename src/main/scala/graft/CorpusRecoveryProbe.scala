@@ -41,8 +41,7 @@ object CorpusRecoveryProbe {
     require(args.nonEmpty, "usage: CorpusRecoveryProbe <sfDir> [drops]")
     val sfDir = args(0)
     val drops = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-corpusrecovery", cpus)
+    val spark = Engine.session("graft-corpusrecovery")
     spark.sparkContext.setLogLevel("WARN")
 
     val docsDir = java.nio.file.Files.createTempDirectory("crp-docs").toString

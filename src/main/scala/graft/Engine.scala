@@ -2,13 +2,54 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session factory for the graft engine.
+/** The engine's `SPARK_GRAFT_*` tuning knobs, parsed in one place.
   *
-  * Defaults chosen for the judge harness (local[32], 128 GiB) but the
-  * knobs are the ones that matter on a real cluster too: AQE on (runtime
-  * shuffle-partition coalescing + skew-join splitting), UTC session time
-  * zone (oracle parity), shuffle partitions sized to the parallelism at
-  * hand rather than the 200 default.
+  * A missing, non-numeric or non-positive value falls back to the
+  * default, so a bad A/B override degrades to the measured setting
+  * instead of crashing a query. `SPARK_GRAFT_FAN_DISABLE` is a
+  * presence switch: set to anything, it disables
+  * [[graft.operators.Partitioning.fanOutSmallScan]].
+  * (`SPARK_GRAFT_SF_DIR`, Bench's input path, is a deployment path,
+  * not a knob.)
+  *
+  * @param cpus           `SPARK_GRAFT_CPUS`: local-mode cores (default nproc)
+  * @param initialShuffle `SPARK_GRAFT_INITIAL_SHUFFLE`: pins the initial
+  *                       shuffle bucket count (default: size-derived,
+  *                       see [[Engine.initialShufflePartitions]])
+  * @param minPartition   `SPARK_GRAFT_MIN_PARTITION`: AQE coalesce floor
+  *                       in bytes (default 128 KiB)
+  * @param fanDisable     `SPARK_GRAFT_FAN_DISABLE` is set
+  */
+final case class Knobs(cpus: Int, initialShuffle: Option[Int],
+                       minPartition: Long, fanDisable: Boolean)
+
+object Knobs {
+  /** Pure parse of an environment map (specs pass their own). */
+  def parse(env: Map[String, String]): Knobs = {
+    def positive(key: String): Option[Long] =
+      env.get(key).flatMap(_.trim.toLongOption).filter(_ > 0)
+    def positiveInt(key: String): Option[Int] =
+      positive(key).filter(_ <= Int.MaxValue).map(_.toInt)
+    Knobs(
+      cpus = positiveInt("SPARK_GRAFT_CPUS")
+        .getOrElse(Runtime.getRuntime.availableProcessors()),
+      initialShuffle = positiveInt("SPARK_GRAFT_INITIAL_SHUFFLE"),
+      minPartition = positive("SPARK_GRAFT_MIN_PARTITION").getOrElse(128L << 10),
+      fanDisable = env.contains("SPARK_GRAFT_FAN_DISABLE"))
+  }
+
+  /** This process's knobs, read from `sys.env` once. */
+  lazy val env: Knobs = parse(sys.env)
+}
+
+/** Session factory for the graft engine — the ONLY SparkSession
+  * builder in the program, so Bench, Verify, the probes and the test
+  * suite run the same confs.
+  *
+  * The knobs are the ones that matter on a real cluster too: AQE on
+  * (runtime shuffle-partition coalescing + skew-join splitting), UTC
+  * session time zone (oracle parity), shuffle partitions sized to the
+  * parallelism at hand rather than the 200 default.
   */
 object Engine {
   /** Scale-adaptive initial shuffle bucket count (pre-AQE-coalesce).
@@ -32,8 +73,9 @@ object Engine {
     * A/B runs; callers that cannot name a data dir keep the `cpus * 8`
     * middle ground.
     */
-  def initialShufflePartitions(cpus: Int, dataDir: String): Int =
-    sys.env.get("SPARK_GRAFT_INITIAL_SHUFFLE").map(_.toInt).getOrElse {
+  def initialShufflePartitions(cpus: Int, dataDir: String,
+                               knobs: Knobs = Knobs.env): Int =
+    knobs.initialShuffle.getOrElse {
       val bytes =
         try {
           val p = java.nio.file.Paths.get(dataDir)
@@ -61,20 +103,21 @@ object Engine {
     math.max(cpus.toLong,
       math.min(bytes / (8L << 20), cpus.toLong * 32L)).toInt
 
-  /** `extraConfs` are applied LAST (they win over the defaults) — for
-    * probe-specific static confs that must be set before the session
-    * exists (e.g. codegen cache sizing), so probes can reuse this
-    * factory instead of hand-rolling a builder that drifts.
+  /** Every conf [[session]] sets, as one map. `extraConfs` are applied
+    * LAST (they win over the defaults) — for caller-specific static
+    * confs that must be set before the session exists. A known
+    * `dataDir` sizes the initial shuffle bucket count from the input
+    * volume ([[initialShufflePartitions]]).
     */
-  def session(appName: String = "graft",
-              cpus: Int = Runtime.getRuntime.availableProcessors(),
-              extraConfs: Map[String, String] = Map.empty): SparkSession = {
-    val spark = extraConfs.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+  private[graft] def confs(cpus: Int,
+                           extraConfs: Map[String, String] = Map.empty,
+                           dataDir: Option[String] = None,
+                           knobs: Knobs = Knobs.env): Map[String, String] =
+    Map(
+      "spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
       // Pre-coalesce shuffle bucket count ABOVE the core count, so AQE
       // sizes reduce-side partitions from data volume instead of being
       // pinned at `cpus`. With 32 buckets a 10×-scale hash aggregate
@@ -89,13 +132,11 @@ object Engine {
       // existing checkpoints keep restoring. This is the local stand-in
       // for the cluster-side rule: initial shuffle partitions track
       // data scale (files.maxPartitionBytes-ish), AQE owns the final
-      // count.
-      // (callers with a known input dir — Bench, Verify — pass the
-      // size-derived count via extraConfs / their own builders; see
-      // initialShufflePartitions above. The env override applies here
-      // too so probes can be A/B'd without a rebuild.)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_SHUFFLE", (cpus * 8).toString))
+      // count. A caller naming its data dir gets the size-derived
+      // count instead (see initialShufflePartitions above).
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        dataDir.fold(knobs.initialShuffle.getOrElse(cpus * 8))(
+          initialShufflePartitions(cpus, _, knobs)).toString,
       // AQE coalesce floor 1 MiB → 128 KiB: the default folds every
       // sub-MiB shuffle to ONE task, serializing compute-dense reduce
       // stages (posting-list pair explode, CC star rounds, banded
@@ -108,25 +149,25 @@ object Engine {
       // improve, worst regression +0.5 s (md5 panel twins). Scale-safe:
       // a fixed per-task byte floor, not a core-count constant — at
       // production shuffle sizes the 64 MiB advisory target governs
-      // and this floor is unreachable. Env override for A/B.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "131072"))
-      .config("spark.sql.session.timeZone", "UTC")
+      // and this floor is unreachable.
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+        knobs.minPartition.toString,
+      "spark.sql.session.timeZone" -> "UTC",
       // testdata events.parquet carries TIMESTAMP(NANOS); Spark only
       // supports micros — read nanos as long, Tables.events converts.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       // Input parquet may carry isAdjustedToUTC=false micros (pyarrow's
       // default for naive datetimes); read them as plain TimestampType
       // under the UTC session rather than TIMESTAMP_NTZ, so timestamp
       // functions (unix_millis, watermarks, windows) keep working and
       // values match the oracle's naive-timestamp semantics.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
       // Write timestamps as annotated micros, not legacy INT96: INT96
       // columns carry NO parquet min/max statistics, which silently
       // disables row-group/file skipping on every time predicate — at
       // 100 TB, the difference between reading a month and reading the
       // whole table (measured: LayoutProbe, SCALE.md).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
       // Align Spark's whole-stage-codegen bailout with HotSpot's JIT
       // huge-method limit (-XX:DontCompileHugeMethods, 8000 bytecodes).
       // The default (65535) happily keeps WSCG plans whose single
@@ -136,21 +177,29 @@ object Engine {
       // per-expression codegen (each method small enough to JIT):
       // measured on q_url_canon's projection tree (30+ regex/string ops
       // + md5 nibbles + SortSegments over 4 M rows) 2.37 s → 0.99 s
-      // (UrlSortProbe, SCALE.md round-12 "the codegen that would not
-      // JIT"). Plans under 8000 bytecodes are untouched.
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
+      // (SCALE.md round-12 "The codegen that would not JIT"). Plans
+      // under 8000 bytecodes are untouched.
+      "spark.sql.codegen.hugeMethodLimit" -> "8000",
       // Generated-class cache sized above the suite's distinct-plan
       // count (static conf — must be set before the session exists).
       // The 100-entry default LRU-thrashes on the wide md5-twin plans:
       // every pass re-pays multi-second Janino compiles on a rotating
-      // set (the Bench builder has carried this since round 2; probes
-      // built HERE were still paying it — CurateFastProbe measured
-      // 4.67 s for a path Bench times at ~2.4 in-suite before this).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-    ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+      // set of queries — the "rotating JIT stall" of every bench record
+      // until round 2. 4096 keeps every plan's generated class
+      // resident, so a warmup pass actually warms (the isolated
+      // production-curation timing in BASELINE.md read 4.67 s on a
+      // session without it, for a path Bench times at ~2.4 s in-suite).
+      "spark.sql.codegen.cache.maxEntries" -> "4096",
+      "spark.ui.enabled" -> "false"
+    ) ++ extraConfs
+
+  /** The engine session: [[confs]] applied to one builder. */
+  def session(appName: String = "graft",
+              cpus: Int = Knobs.env.cpus,
+              extraConfs: Map[String, String] = Map.empty,
+              dataDir: Option[String] = None): SparkSession = {
+    val spark = SparkSession.builder().appName(appName)
+      .config(confs(cpus, extraConfs, dataDir)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

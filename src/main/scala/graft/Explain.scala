@@ -20,10 +20,9 @@ package graft
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = Engine.session("graft-explain",
-      sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(8))
-    spark.sparkContext.setLogLevel("WARN")
     val sfDir = args(0)
+    // Bench's session: the plans printed are the plans it measures
+    val spark = Engine.session("graft-explain", dataDir = Some(sfDir))
     for (q <- args.drop(1)) {
       val df = SparkEntry.queries(q)(spark, sfDir)
       println(s"\n=== $q ===")

@@ -27,8 +27,7 @@ object FixedCostProbe {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q_o3_top1", "q_p5_rowid", "q_f_orders", "q1_agg", "q_a8_hist",
         "q_lang_id", "q_dedup_exact")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-fixedcost", cpus)
+    val spark = Engine.session("graft-fixedcost")
     spark.sparkContext.setLogLevel("WARN")
 
     def compiles(): (Long, Long) = {

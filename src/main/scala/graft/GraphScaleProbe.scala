@@ -39,8 +39,7 @@ object GraphScaleProbe {
     val nNodes = pos.headOption.map(_.toLong).getOrElse(3L << 20)
     val nRaw = if (pos.length > 1) pos(1).toLong else 5L << 20
     val parity = !flags.contains("--no-parity")
-    val spark = Engine.session("graft-graphscale",
-      sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32))
+    val spark = Engine.session("graft-graphscale")
     val cpDir = java.nio.file.Files.createTempDirectory("graft-cp").toString
     spark.sparkContext.setCheckpointDir(cpDir)
 

@@ -45,8 +45,7 @@ object IncCurationProbe {
     val dir = args.headOption.getOrElse("testdata-sf10")
     val fracs = args.drop(1).headOption
       .map(_.split(",").map(_.toDouble).toSeq).getOrElse(Seq(0.02, 0.10, 0.50))
-    val spark = Engine.session("graft-inccuration",
-      sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32))
+    val spark = Engine.session("graft-inccuration")
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- shuffle accounting: totals snapshot-ed per phase ----

@@ -50,8 +50,7 @@ import org.apache.spark.sql.functions._
 object JdbcScaleProbe {
   def main(args: Array[String]): Unit = {
     val nRows = if (args.nonEmpty) args(0).toLong else 10_000_000L
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-jdbcscale", cpus)
+    val spark = Engine.session("graft-jdbcscale")
     import spark.implicits._
 
     val dbDir = java.nio.file.Files.createTempDirectory("jdbcscale").toString

@@ -45,8 +45,7 @@ object LayoutProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: LayoutProbe <sfDir>")
     val sfDir = args(0)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-layoutprobe", cpus)
+    val spark = Engine.session("graft-layoutprobe")
 
     val bytesRead = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(

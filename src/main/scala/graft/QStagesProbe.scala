@@ -10,7 +10,7 @@ object QStagesProbe {
   def main(args: Array[String]): Unit = {
     val sf = args(0); val q = args(1)
     val passes = args.drop(2).headOption.map(_.toInt).getOrElse(1)
-    val spark = Engine.session("qstages", 32)
+    val spark = Engine.session("qstages")
     val fn = SparkEntry.queries(q)
     fn(spark, sf).write.format("noop").mode("overwrite").save()
     spark.catalog.clearCache()

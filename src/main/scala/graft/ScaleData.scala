@@ -68,9 +68,7 @@ object ScaleData {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleData <inDir> <outDir> [replicas]")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = Engine.session("graft-scaledata", cpus)
+    val spark = Engine.session("graft-scaledata")
     run(spark, args(0), args(1),
       if (args.length > 2) args(2).toInt else 10)
     spark.stop()

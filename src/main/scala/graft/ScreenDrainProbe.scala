@@ -53,7 +53,7 @@ object ScreenDrainProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/repo/testdata-sf10"
     val cycles = if (args.length > 1) args(1).toInt else 8
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
+    val cpus = Knobs.env.cpus
     val base = java.nio.file.Files.createTempDirectory("sdp").toString
     val spark = Engine.session("graft-screendrain", cpus, Map(
       "spark.sql.streaming.stateStore.providerClass" ->

@@ -31,8 +31,7 @@ object ScreenRestartProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/repo/testdata-sf10"
     val maxFiles = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-screenrestart", cpus, Map(
+    val spark = Engine.session("graft-screenrestart", extraConfs = Map(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     spark.sparkContext.setLogLevel("WARN")

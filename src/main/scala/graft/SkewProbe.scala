@@ -35,8 +35,7 @@ object SkewProbe {
     // unsorted levels would misreport
     val levels = (if (args.length > 1) args(1) else "3,6,9")
       .split(",").map(_.trim.toInt).toSeq.sorted
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-skewprobe", cpus)
+    val spark = Engine.session("graft-skewprobe")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     def agg(joined: DataFrame): DataFrame =

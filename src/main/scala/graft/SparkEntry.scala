@@ -1872,8 +1872,8 @@ object SparkEntry {
           Tables.documentsWide(s, d), "text", "doc_id")
         .orderBy("doc_id")),
     // The PRODUCTION fast path in isolation (xxhash64 MinHash+LSH →
-    // CC → gates, no verification twin) is measured by
-    // graft.CurateFastProbe, NOT registered here: its kept set is
+    // CC → gates, no verification twin) is NOT registered here (its
+    // isolated timing is recorded in BASELINE.md): its kept set is
     // engine-specific (no DuckDB replay for xxhash64), so a queries
     // entry can only ever be a permanent no-oracle row in the driver
     // ledger (r13 verdict item 2). Correctness rides on q_curate_lsh's
@@ -2545,20 +2545,6 @@ object SparkEntry {
     * 5 TLDs → 60 registrable domains, so the per-domain cap is active
     * at every SF. Replayed bit-identically by [[urlDomainCtes]].
     */
-  /** Probe hook: q_url_canon's input frame (documents + synthetic URL)
-    * — UrlSortProbe A/Bs param-sort variants over the identical tree.
-    */
-  def docsWithSynthUrl(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"))
-      .withColumn("url", synthUrl(col("doc_id")))
-
-  /** Probe hook: q_html_extract's input frame (documents + synthesized
-    * page) — HtmlProbe A/Bs the native extractor against the chain.
-    */
-  def docsWithSynthHtml(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"), col("text"))
-      .select(col("doc_id"), synthHtml(col("doc_id"), col("text")).as("html"))
-
   private def synthUrl(id: Column): Column = {
     val h = md5(id.cast("string"))
     def nib(i: Int): Column = conv(substring(h, i, 1), 16, 10).cast("int")

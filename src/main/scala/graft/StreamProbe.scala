@@ -26,8 +26,7 @@ object StreamProbe {
     val sfDir = if (args.nonEmpty) args(0) else "/root/repo/testdata-sf10"
     val maxFiles = if (args.length > 1) args(1).toInt else 8
     val minRate = if (args.length > 2) args(2).toDouble else 0.0
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-streamprobe", cpus)
+    val spark = Engine.session("graft-streamprobe")
 
     val dir = s"$sfDir/events.parquet"
     val schema = spark.read.parquet(dir).schema

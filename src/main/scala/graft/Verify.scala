@@ -1,46 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Verify keeps the INT96 write default DELIBERATELY, unlike Engine:
+    * the driver's oracle comparator reads these dumps with pandas,
+    * which maps annotated micros (isAdjustedToUTC=true) to tz-AWARE
+    * dtypes and then refuses naive comparisons. INT96 reads back
+    * tz-naive. Stats don't matter on one-shot correctness dumps.
+    */
+  private[graft] val confOverrides: Map[String, String] =
+    Map("spark.sql.parquet.outputTimestampType" -> "INT96")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: restrict to named queries (dev iteration;
     // the driver always passes exactly two args → full dump)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // naive-micros parquet reads as TimestampType, not NTZ (see Engine)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Verify keeps the INT96 write default DELIBERATELY, unlike
-      // Engine: the driver's oracle comparator reads these dumps with
-      // pandas, which maps annotated micros (isAdjustedToUTC=true) to
-      // tz-AWARE dtypes and then refuses naive comparisons. INT96 reads
-      // back tz-naive. Stats don't matter on one-shot correctness dumps.
-      .config("spark.sql.adaptive.enabled", "true")
-      // data-volume-sized initial shuffle buckets, AQE owns the final
-      // count (see Engine.initialShufflePartitions — the 8 g sf10 OOM
-      // fix without the flat-8× sf0.1 tax); set here so correctness
-      // dumps run the SAME plans the bench measures
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Engine.initialShufflePartitions(cpus.toInt, sfDir).toString)
-      // AQE coalesce floor 128 KiB (see Engine.session) — same plans
-      // as the bench measures
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "131072"))
-      // WSCG bailout at the JIT huge-method limit (see Engine.session);
-      // set here too so Verify exercises the SAME execution paths the
-      // bench and production sessions use (the non-WSCG fallback must
-      // stay value-identical, and this is where that's proven).
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's session (same plans, same execution paths — the
+    // non-WSCG fallback must stay value-identical, and this is where
+    // that's proven) plus the INT96 write override above
+    val spark = Engine.session("graft-verify", extraConfs = confOverrides,
+      dataDir = Some(sfDir))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

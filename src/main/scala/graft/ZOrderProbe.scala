@@ -117,8 +117,7 @@ object ZOrderProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ZOrderProbe <sfDir> [curve]")
     val sfDir = args(0)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-zorderprobe", cpus)
+    val spark = Engine.session("graft-zorderprobe")
     if (args.length > 1 && args(1) == "curve") {
       curve(spark, sfDir)
       spark.stop()

@@ -231,7 +231,7 @@ object BpeTrain {
     * even when the guard trips — the fetch stops as soon as the limit
     * is exceeded, it never ships the whole oversized vocab), and one
     * word past the cap raises with a pointer at `minFreq`. Measured
-    * anchor (SCALE.md "BPE driver-vocab bound", BpeVocabProbe): the
+    * anchor (SCALE.md "BPE driver-vocab bound"): the
     * sf10 corpus reduces 27.07M running words to 2,274 distinct — four
     * orders of magnitude under the default cap — and real 100 TB web
     * corpora sit at tens of millions AFTER the standard minFreq hapax

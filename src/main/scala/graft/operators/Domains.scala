@@ -67,29 +67,7 @@ object Domains {
     * inside the proven-to-thread-scale java.util.regex subset (see
     * SCALE.md "The regex that would not parallelize").
     */
-  def urlCanonicalize(u: Column): Column =
-    urlCanonicalizeWith(u,
-      // native one-pass param sort — value-identical to the HOF chain
-      // when(s === "", "").otherwise(concat("?", s)) for
-      // s = array_join(array_sort(filter(split(q, "&"), x =!= "")), "&")
-      // (SortSegmentsSpec pins the equivalence incl. a random-soup law)
-      // without split's per-row Pattern.compile or the three
-      // CodegenFallback HOF nodes. prefix = "?" matters beyond style:
-      // it makes the "? only when params survive" conditional ONE
-      // occurrence of the expression — the when/otherwise form names
-      // `params` twice, and conditional branches get no cross-branch
-      // subexpression elimination, so the ENTIRE regex chain feeding
-      // `query` evaluated twice (the UrlSortProbe full-tree A/B).
-      q => graft.plans.SortSegments.sorted(q, "&", dropEmpty = true,
-        prefix = "?"))
-
-  /** [[urlCanonicalize]] with the query-part construction pluggable —
-    * the hook maps the raw query string to the FULL query part (empty
-    * string when no params survive, else `?` + sorted params).
-    * UrlSortProbe A/Bs the native expression against the HOF chain
-    * through this hook; production callers use [[urlCanonicalize]].
-    */
-  def urlCanonicalizeWith(u: Column, queryPartOf: Column => Column): Column = {
+  def urlCanonicalize(u: Column): Column = {
     val noFrag = regexp_replace(trim(u), "#.*$", "")
     val scheme = lower(regexp_extract(noFrag, schemeRe, 1))
     val rest = regexp_replace(noFrag, schemeRe, "")
@@ -107,7 +85,20 @@ object Domains {
     val path = when(strippedPath === "", lit("/")).otherwise(strippedPath)
     val query = when(pathQ.contains("?"),
       regexp_replace(pathQ, "^[^?]*\\?", "")).otherwise(lit(""))
-    val queryPart = queryPartOf(query)
+    // native one-pass param sort — value-identical to the HOF chain
+    // when(s === "", "").otherwise(concat("?", s)) for
+    // s = array_join(array_sort(filter(split(q, "&"), x =!= "")), "&")
+    // (SortSegmentsSpec pins the equivalence incl. a random-soup law)
+    // without split's per-row Pattern.compile or the three
+    // CodegenFallback HOF nodes. prefix = "?" matters beyond style:
+    // it makes the "? only when params survive" conditional ONE
+    // occurrence of the expression — the when/otherwise form names
+    // `params` twice, and conditional branches get no cross-branch
+    // subexpression elimination, so the ENTIRE regex chain feeding
+    // `query` evaluated twice (full-tree A/B recorded in SCALE.md,
+    // "The codegen that would not JIT").
+    val queryPart = graft.plans.SortSegments.sorted(query, "&",
+      dropEmpty = true, prefix = "?")
     when(scheme === "", lower(noFrag))
       .otherwise(concat(scheme, lit("://"), host, portPart, path, queryPart))
   }

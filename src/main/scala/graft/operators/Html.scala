@@ -28,7 +28,8 @@ object Html {
   /** The executable specification: chain passes 1-7 (see
     * [[graft.plans.HtmlToText]] scaladoc for the rule list). Eleven
     * java.util.regex passes per document — correct but ~8× slower than
-    * the native expression at sf10 (HtmlProbe); use
+    * the native expression at sf10 (SCALE.md "HTML→text extraction,
+    * native"); use
     * [[graft.plans.HtmlToText.of]] in production.
     */
   def htmlToTextChain(c: Column): Column = {

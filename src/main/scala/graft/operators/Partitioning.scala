@@ -39,8 +39,7 @@ import org.apache.spark.sql.DataFrame
   * 5.1→3.9); the single-pass pair-explode queries mildly prefer full
   * width (q_jaccard_pairs 1.32→1.52) — the global 128 KiB default
   * takes that documented trade. At production scale the rule is
-  * identical (no-op path). `SPARK_GRAFT_FAN_BYTES` overrides the
-  * divisor for A/B runs.
+  * identical (no-op path).
   *
   * Round-robin under `spark.sql.execution.sortBeforeRepartition`
   * (default) keeps row→partition assignment deterministic under task
@@ -55,24 +54,24 @@ import org.apache.spark.sql.DataFrame
   * the scan task), so lineitem/orders keep their raw scans.
   */
 object Partitioning {
-  /** Input bytes per fan-out partition (A/B override:
-    * `SPARK_GRAFT_FAN_BYTES`). See the width-sizing rationale above.
+  /** Input bytes per fan-out partition. See the width-sizing
+    * rationale above.
     */
-  private def fanBytesPerPartition: Long =
-    sys.env.get("SPARK_GRAFT_FAN_BYTES").map(_.toLong).getOrElse(128L << 10)
+  private val fanBytesPerPartition: Long = 128L << 10
 
   /** The pure width rule: ceil(bytes / fanBytesPerPartition) clamped
-    * to [2, cpus]. Exposed for the spec.
+    * to [2, cpus] — the cap wins, so a 1-core session never fans out.
+    * Exposed for the spec.
     */
   private[graft] def fanWidth(cpus: Int, bytes: Long): Int = {
     val per = fanBytesPerPartition
-    math.max(2L, math.min(cpus.toLong, (bytes + per - 1) / per)).toInt
+    math.min(cpus.toLong, math.max(2L, (bytes + per - 1) / per)).toInt
   }
 
   def fanOutSmallScan(df: DataFrame, path: String,
                       maxBytes: Long = 1L << 30): DataFrame = {
     // kill switch for interleaved wide-vs-raw A/B runs (no rebuild)
-    if (sys.env.contains("SPARK_GRAFT_FAN_DISABLE")) return df
+    if (graft.Knobs.env.fanDisable) return df
     val cpus = df.sparkSession.sparkContext.defaultParallelism
     val (files, bytes) = scanFootprint(path)
     if (files > 0 && bytes <= maxBytes) {
@@ -84,7 +83,7 @@ object Partitioning {
   /** (regular file count, total bytes) under `path` — a file counts as
     * one scan slot (single-row-group parquet does not split further).
     */
-  private def scanFootprint(path: String): (Long, Long) =
+  private[graft] def scanFootprint(path: String): (Long, Long) =
     try {
       val p = java.nio.file.Paths.get(path)
       if (java.nio.file.Files.isRegularFile(p))

@@ -576,8 +576,9 @@ object Similarity {
     // normalize the CENTROID side too — Lloyd means have norms < 1 that
     // vary per cluster, and raw data-point centroid sets have norms ≫ 1,
     // so an unnormalized dot is not the documented cosine and inertia
-    // values were not comparable across centroid SOURCES (caught by
-    // CentroidProbe reading a better-recall fit as "worse" inertia)
+    // values were not comparable across centroid SOURCES (caught when
+    // the CENTROID_RECALL.json measurement read a better-recall fit as
+    // "worse" inertia)
     val cent = normalized(centroids.select(col("cent_id").as("_cid"),
         col("centroid")), "_cid", "centroid", "cent_id", "centv")
     v.crossJoin(broadcast(cent))

@@ -182,7 +182,7 @@ object SortSegments {
     * it as ONE occurrence of the expression: `sorted` appearing twice
     * in a projection re-evaluates its whole child subtree twice
     * (cross-branch subexpression elimination does not reach
-    * conditional values — the UrlSortProbe finding).
+    * conditional values — SCALE.md "The codegen that would not JIT").
     */
   def sorted(text: Column, sep: String, dropEmpty: Boolean = true,
              prefix: String = ""): Column =

@@ -32,7 +32,7 @@ class EngineSizingSpec extends AnyFunSuite {
   }
 
   test("directory helper floors to cpus when the dir is missing") {
-    assert(Engine.initialShufflePartitions(16, "/nonexistent-graft-dir") == 16
-      || sys.env.contains("SPARK_GRAFT_INITIAL_SHUFFLE"))
+    assert(Engine.initialShufflePartitions(16, "/nonexistent-graft-dir",
+      Knobs.parse(Map.empty)) == 16)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.Sinks
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates the golden CSVs for the `no_oracle` driver queries
@@ -24,14 +23,7 @@ object GoldenGen {
   val sfDir = "/root/testdata/sf0.01"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-golden", 8, dataDir = Some(sfDir))
     goldenQueries.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val allString = df.select(df.columns.map(c => col(c).cast("string").as(c)): _*)

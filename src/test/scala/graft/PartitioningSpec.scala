@@ -15,8 +15,9 @@ class PartitioningSpec extends SparkSpec {
 
   test("small single-file scan fans out to the byte-sized width") {
     val docs = Tables.documents(spark, sf)
-    val bytes = java.nio.file.Files.size(
-      java.nio.file.Paths.get(s"$sf/documents.parquet"))
+    // the byte total the decision reads — right for a single-file and
+    // a directory dataset alike
+    val (_, bytes) = Partitioning.scanFootprint(s"$sf/documents.parquet")
     val wide = Partitioning.fanOutSmallScan(docs, s"$sf/documents.parquet")
     assert(wide.rdd.getNumPartitions ==
       Partitioning.fanWidth(spark.sparkContext.defaultParallelism, bytes),
@@ -37,6 +38,8 @@ class PartitioningSpec extends SparkSpec {
     // cap: width never exceeds the session parallelism
     assert(Partitioning.fanWidth(32, 1L << 30) == 32)
     assert(Partitioning.fanWidth(8, 1L << 30) == 8)
+    // the cap wins over the floor: a 1-core session never fans out
+    assert(Partitioning.fanWidth(1, 1L << 30) == 1)
   }
 
   test("no-op when the table exceeds the byte cap or path is missing") {

@@ -10,26 +10,12 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val sharedSession: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // naive-micros parquet reads as TimestampType, not NTZ (see Engine)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // micros not INT96 on write: INT96 has no min/max stats (see Engine)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      // WSCG bailout at the JIT huge-method limit (see Engine.session)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // bucketed-table specs use saveAsTable; keep the warehouse out of
-      // the repo tree
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-test-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The production session (Engine.session) at 4 cores, sized for the
+    * sf0.001 fixtures like Bench sizes for its sf dir. */
+  lazy val sharedSession: SparkSession = Engine.session("graft-test", 4,
+    // bucketed-table specs use saveAsTable; keep the warehouse out of
+    // the repo tree
+    Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-test-wh").toString),
+    dataDir = Some("/root/testdata/sf0.001"))
 }
