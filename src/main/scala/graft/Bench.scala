@@ -118,8 +118,7 @@ object Bench {
     // signature) — it is the diagnostic, not a perf metric.
     // The listener bus is async: without settling, task-end events from
     // the last query can still be in flight and the spill counters
-    // undercount (LayoutProbe settles its byte counters for the same
-    // race). Poll until both counters are stable for 3 ticks.
+    // undercount. Poll until both counters are stable for 3 ticks.
     locally {
       var settled = 0
       var prev = (memSpilled.get, diskSpilled.get)

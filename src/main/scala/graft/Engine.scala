@@ -69,32 +69,17 @@ object Engine {
     * sf0.1 (17.5 MB → `cpus`): the flat-256 regression reverts; at
     * sf10 (~1.75 GB → ~219): same regime as the flat 8× OOM fix.
     *
+    * The input volume is [[graft.operators.Partitioning.scanFootprint]]'s
+    * byte count for `dataDir` (the same walk the fan-out rule uses).
+    *
     * `SPARK_GRAFT_INITIAL_SHUFFLE` overrides for cluster tuning and
     * A/B runs; callers that cannot name a data dir keep the `cpus * 8`
     * middle ground.
     */
   def initialShufflePartitions(cpus: Int, dataDir: String,
                                knobs: Knobs = Knobs.env): Int =
-    knobs.initialShuffle.getOrElse {
-      val bytes =
-        try {
-          val p = java.nio.file.Paths.get(dataDir)
-          if (java.nio.file.Files.isDirectory(p)) {
-            val s = java.nio.file.Files.walk(p)
-            try {
-              val it = s.iterator()
-              var sum = 0L
-              while (it.hasNext) {
-                val f = it.next()
-                if (java.nio.file.Files.isRegularFile(f))
-                  sum += java.nio.file.Files.size(f)
-              }
-              sum
-            } finally s.close()
-          } else 0L
-        } catch { case _: Throwable => 0L }
-      sizeInitialPartitions(cpus, bytes)
-    }
+    knobs.initialShuffle.getOrElse(sizeInitialPartitions(cpus,
+      graft.operators.Partitioning.scanFootprint(dataDir)._2))
 
   /** The pure sizing rule behind [[initialShufflePartitions]]:
     * one initial bucket per 8 MiB of on-disk input, clamped to
@@ -166,7 +151,8 @@ object Engine {
       // columns carry NO parquet min/max statistics, which silently
       // disables row-group/file skipping on every time predicate — at
       // 100 TB, the difference between reading a month and reading the
-      // whole table (measured: LayoutProbe, SCALE.md).
+      // whole table (measured at sf10: SCALE.md, "Selective range
+      // predicates").
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
       // Align Spark's whole-stage-codegen bailout with HotSpot's JIT
       // huge-method limit (-XX:DontCompileHugeMethods, 8000 bytecodes).
@@ -248,7 +234,7 @@ object Tables {
     * evicted. The sweep mechanics are predicate-driven so tests can
     * exercise them against a LIVE session (a spec cannot stop the
     * suite-shared SparkContext; the listener-fired stop path is
-    * asserted end-to-end in ScreenDrainProbe, which owns its JVM).
+    * asserted end-to-end by RelCacheSpec in a child JVM it owns).
     */
   def evictWhere(p: SparkSession => Boolean): Int = {
     var n = 0

@@ -210,7 +210,7 @@ object Sinks {
     * in (cols)-space — selective predicates on ANY of the columns then
     * skip most of the table via footer stats. The multi-column
     * counterpart of the single-column sort-on-write layout (SCALE.md,
-    * LayoutProbe); shuffle paid once at write time.
+    * "Sort-on-write data skipping"); shuffle paid once at write time.
     */
   /** The pre-write z-ordered frame — exposed so PlanAuditSpec can pin
     * the layout plan (range Exchange on `_zkey`, local Sort below the
@@ -251,8 +251,8 @@ object Sinks {
     *     matter.
     *   - Some(c): `repartitionByRange(c) + sortWithinPartitions(c)` —
     *     one shuffle that simultaneously compacts AND restores the
-    *     sort-on-write skipping layout (LayoutProbe's discipline);
-    *     fragmented ingest usually destroyed it anyway.
+    *     sort-on-write skipping layout (SCALE.md, "Sort-on-write data
+    *     skipping"); fragmented ingest usually destroyed it anyway.
     *
     * Writes to `outPath` then atomically swaps only if `outPath` ==
     * `inPath` is NOT requested — in-place compaction of a live dataset

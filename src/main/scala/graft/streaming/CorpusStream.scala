@@ -257,11 +257,11 @@ object CorpusStream {
     * stateful path, which anchors/collides exactly like the unbounded
     * twin and additionally emits an `"anchor"` event on install. State
     * is therefore bounded by ONE CYCLE'S new buckets regardless of
-    * corpus age — the plateau ScreenDrainProbe measures — while the
-    * accept rule stays bit-identical to the unbounded screen: given
-    * the same batching, hits(bounded, all cycles) ≡ hits(unbounded)
-    * (StreamingDedupSpec pins it; the probe re-proves it at sf10
-    * volume).
+    * corpus age — the plateau StreamingDedupSpec's drain-cycle test
+    * pins and BENCH_sf10.json's `screen_drain_r*` records hold at sf10
+    * — while the accept rule stays bit-identical to the unbounded
+    * screen: given the same batching, hits(bounded, all cycles) ≡
+    * hits(unbounded) (the same test pins it).
     *
     * A drain cycle is: stop the query; append `screenSnapshot(sink)`
     * to the snapshot table (idempotent if partitioned by cycle and

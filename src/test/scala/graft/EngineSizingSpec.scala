@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Pins the scale-adaptive initial-shuffle-bucket rule
   * (`Engine.sizeInitialPartitions`): one bucket per 8 MiB of on-disk
   * input, clamped to [cpus, cpus*32]. The floor keeps sf0.1-class
@@ -10,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reproduces the 8 GiB sf10 OOM fix (~1.75 GB → ~219 buckets ≈ the
   * 8×32 that fixed it); the cap bounds block-count growth (§2.2).
   */
-class EngineSizingSpec extends AnyFunSuite {
+class EngineSizingSpec extends SparkSpec {
 
   test("floor: small inputs stay at cpus buckets") {
     assert(Engine.sizeInitialPartitions(32, 0L) == 32)
@@ -29,6 +27,25 @@ class EngineSizingSpec extends AnyFunSuite {
   test("cap: buckets never exceed cpus*32") {
     assert(Engine.sizeInitialPartitions(32, Long.MaxValue / 2) == 32 * 32)
     assert(Engine.sizeInitialPartitions(4, 100L << 30) == 4 * 32)
+  }
+
+  test("directory helper sizes the testdata dirs from every file's bytes") {
+    // scanFootprint skips `_`/`.`-prefixed metadata files; the testdata
+    // dirs hold none, so the count equals a walk over every regular file
+    for (scale <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val dir = java.nio.file.Paths.get(sfDir(scale))
+      val walk = java.nio.file.Files.walk(dir)
+      val allBytes =
+        try walk.filter(java.nio.file.Files.isRegularFile(_))
+          .mapToLong(java.nio.file.Files.size(_)).sum()
+        finally walk.close()
+      assert(allBytes > 0, s"$scale: no input found")
+      assert(graft.operators.Partitioning.scanFootprint(dir.toString)._2 == allBytes, scale)
+      for (cpus <- Seq(1, 4, 32))
+        assert(Engine.initialShufflePartitions(cpus, dir.toString,
+          Knobs.parse(Map.empty)) == Engine.sizeInitialPartitions(cpus, allBytes),
+          s"$scale at $cpus cpus")
+    }
   }
 
   test("directory helper floors to cpus when the dir is missing") {

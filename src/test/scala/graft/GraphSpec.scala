@@ -284,4 +284,63 @@ class GraphSpec extends SparkSpec {
         s"malformed init not refused (threshold=$threshold): $ex")
     }
   }
+
+  /** `body`'s result and the number of Spark jobs it started (counted
+    * by job group, so other work in the JVM is not counted). */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graph-jobs-${System.nanoTime()}"
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(j.jobId): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "graph path selection")
+    try {
+      val out = body
+      // the listener bus is async: wait until the count is stable
+      var (prev, stable) = (-1, 0)
+      while (stable < 3) {
+        Thread.sleep(100)
+        if (jobs.size == prev) stable += 1 else { prev = jobs.size; stable = 0 }
+      }
+      (out, jobs.size)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("selection rule: above an explicit threshold the distributed rounds run, same answers") {
+    // production's rule (edge count <= smallGraphThreshold → one task)
+    // at a small threshold: a 300-node path plus chords is far above
+    // 64 canonical edges, so CC takes the star rounds and PageRank one
+    // job per round. The forced single-task run of the same graph is
+    // the yardstick: it needs 7 (CC) and 6 (PageRank) jobs here, the
+    // distributed paths several times that.
+    val raw = (0L until 299L).map(i => (i, i + 1)) ++
+      (0L until 100L).map(i => ((i * 37) % 300, (i * 91 + 7) % 300))
+    val edges = raw.toDF("a", "b")
+    def ccMap(threshold: Long) =
+      Graph.connectedComponents(edges, "a", "b", smallGraphThreshold = threshold)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def prMap(threshold: Long) =
+      Graph.pageRank(edges, "a", "b", 8, smallGraphThreshold = threshold)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (ccDist, ccJobs) = jobsIn(ccMap(64L))
+    val (ccSingle, ccSingleJobs) = jobsIn(ccMap(Long.MaxValue))
+    assert(ccJobs > 3 && ccJobs > 2 * ccSingleJobs,
+      s"CC ran $ccJobs jobs above the threshold vs $ccSingleJobs single-task")
+    val (prDist, prJobs) = jobsIn(prMap(64L))
+    val (prSingle, prSingleJobs) = jobsIn(prMap(Long.MaxValue))
+    assert(prJobs > 3 && prJobs > 2 * prSingleJobs,
+      s"PageRank ran $prJobs jobs above the threshold vs $prSingleJobs single-task")
+    // both paths give identical labels and longs
+    assert(ccDist == ccSingle)
+    assert(prDist == prSingle)
+    assert(ccDist.size == 300 && ccDist.values.toSet == Set(0L))
+  }
 }

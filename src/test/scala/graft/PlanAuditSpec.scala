@@ -16,6 +16,15 @@ class PlanAuditSpec extends SparkSpec {
 
   private def q(name: String): DataFrame = SparkEntry.queries(name)(spark, sf)
 
+  /** Shuffle Exchanges in the (AQE-current) physical plan; broadcast
+    * exchanges don't count — a broadcast dim is the desired shape.
+    */
+  private def shuffleCount(df: DataFrame): Int = {
+    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    Seq("Exchange hashpartitioning", "Exchange rangepartitioning",
+      "Exchange SinglePartition").map(s => p.sliding(s.length).count(_ == s)).sum
+  }
+
   test("q1_agg: shipdate filter pushed to parquet, unused columns pruned") {
     val p = plan(q("q1_agg"))
     assert(p.contains("PushedFilters") && p.contains("LessThanOrEqual(l_shipdate"),
@@ -551,7 +560,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("writeZOrdered layout plan: range Exchange on _zkey, sort survives the drop") {
-    // the 9.4× multi-column skipping claim (SCALE.md, ZOrderProbe)
+    // the 9.4× multi-column skipping claim (SCALE.md, ZORDER_CURVE.json)
     // rests on two plan properties this pins: (1) the write is
     // range-partitioned on the Morton key — each output file owns a
     // contiguous _zkey slice; (2) the Project that drops _zkey does NOT
@@ -597,7 +606,7 @@ class PlanAuditSpec extends SparkSpec {
     // parquet skipping is row-group-level, so the scan node's own
     // numOutputRows (rows surviving footer-stat skipping + pushdown,
     // BEFORE the Filter node) is the observable. This is the property
-    // the 9.4× sf10 probe measures, pinned at CI scale.
+    // the 9.4× sf10 measurement (SCALE.md) rests on, pinned at CI scale.
     val total = back.count()
     val narrow = back
       .filter(col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
@@ -622,14 +631,14 @@ class PlanAuditSpec extends SparkSpec {
       "pa_lineitem_bkt", Seq("l_orderkey"), 4, Seq("l_orderkey"))
     graft.sources.Sinks.writeBucketed(Tables.orders(spark, sf),
       "pa_orders_bkt", Seq("o_orderkey"), 4, Seq("o_orderkey"))
-    val bucketed = BucketProbe.q3(spark.table("pa_lineitem_bkt"),
+    val bucketed = SparkEntry.q3(spark.table("pa_lineitem_bkt"),
       spark.table("pa_orders_bkt"), Tables.customer(spark, sf))
-    assert(BucketProbe.shuffleCount(bucketed) == 0,
+    assert(shuffleCount(bucketed) == 0,
       s"bucketed q3 still shuffles:\n${bucketed.queryExecution.executedPlan}")
-    val plain = BucketProbe.q3(Tables.lineitem(spark, sf),
+    val plain = SparkEntry.q3(Tables.lineitem(spark, sf),
       Tables.orders(spark, sf), Tables.customer(spark, sf))
-    assert(BucketProbe.shuffleCount(plain) >= 1,
-      "probe self-check: the plain path should shuffle")
+    assert(shuffleCount(plain) >= 1,
+      "self-check: the plain path should shuffle")
     assert(bucketed.collect().toSeq == plain.collect().toSeq,
       "bucketed layout changed the query result")
   }

@@ -71,6 +71,10 @@ class ShardsSpec extends SparkSpec {
     val back = spark.read.parquet(s"$dir/z")
     assert(back.count() == li.count())
     assert(back.columns.sorted.toSeq == li.columns.sorted.toSeq, "schema changed")
+    // same rows, not just as many: any query answers alike on both layouts
+    val liSameOrder = li.select(back.columns.map(col): _*)
+    assert(back.exceptAll(liSameOrder).isEmpty && liSameOrder.exceptAll(back).isEmpty,
+      "the z-ordered layout changed row values")
     // clustering: within each output file, the partkey span should be
     // far tighter than the global span for most files (the z-curve
     // gives each file a hyper-rectangle, not a full-range stripe)

@@ -249,10 +249,34 @@ class SourcesSpec extends SparkSpec {
       "TASK_DAYS_OPEN", 0L, 10L, 3)
     assert(part.rdd.getNumPartitions == 3)
     assert(part.count() == 5)
+
     // filter pushdown survives the JDBC boundary
     val filtered = FileSources.jdbc(spark, url, "StudyAnalytics")
       .filter(col("TASK_DAYS_OPEN") > 4)
     assert(filtered.count() == 2)
+
+    // stripe balance on a dense, id-ordered key (the clustered-primary-
+    // key layout range striping presumes): the planner makes n stripes,
+    // none holds more than twice the mean, and the striped read equals
+    // the single-connection read
+    val nRows = 10000L
+    spark.range(nRows)
+      .select(col("id"), (xxhash64(col("id")) % 1000).cast("int").as("cat"))
+      .coalesce(1).sortWithinPartitions("id")
+      .write.option("batchsize", "10000").jdbc(url, "bigtab", new java.util.Properties())
+    def checksum(df: org.apache.spark.sql.DataFrame) = df.agg(count(lit(1)),
+      sum(xxhash64(col("id"), col("cat")).cast("decimal(38,0)"))).head()
+    val single = checksum(FileSources.jdbc(spark, url, "bigtab"))
+    assert(single.getLong(0) == nRows)
+    for (n <- Seq(7, 16)) {
+      val striped = FileSources.jdbcPartitioned(spark, url, "bigtab", "id", 0L, nRows, n)
+      assert(striped.rdd.getNumPartitions == n, s"$n stripes planned as ${striped.rdd.getNumPartitions}")
+      val rows = striped.groupBy(spark_partition_id()).count()
+        .collect().map(_.getLong(1))
+      assert(rows.length == n && rows.min > 0, s"$n stripes: ${rows.toSeq}")
+      assert(rows.max <= 2L * (nRows / n), s"stripe imbalance at $n: ${rows.toSeq}")
+      assert(checksum(striped) == single, s"$n-stripe read diverged")
+    }
   }
 
   test("strictDate raises on unparseable input, passes nulls (C3)") {

@@ -7,6 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.sharedSession
   val sf: String = "/root/testdata/sf0.001"
+
+  /** The fixtures of another scale factor beside [[sf]] (TESTDATA.md). */
+  def sfDir(scale: String): String =
+    java.nio.file.Paths.get(sf).resolveSibling(scale).toString
 }
 
 object SparkSpec {

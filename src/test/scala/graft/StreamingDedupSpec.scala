@@ -412,6 +412,58 @@ class StreamingDedupSpec extends SparkSpec {
     }
   }
 
+  test("nearDupScreenStateful on RocksDB: a kill after the first committed batch restarts to the uninterrupted hit set") {
+    import graft.streaming.CorpusStream
+    import org.apache.spark.sql.streaming.Trigger
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val saved = spark.conf.getOption(key)
+    val base = java.nio.file.Files.createTempDirectory("screen-kill").toString
+    // sf0.01's documents as 12 files with distinct, fixed mtimes, so
+    // maxFilesPerTrigger = 1 gives 12 batches in the same order per run
+    val docs = spark.read.parquet(s"${sfDir("sf0.01")}/documents.parquet")
+      .select("doc_id", "text")
+    val nDocs = docs.count()
+    val nFiles = 12
+    (0 until nFiles).foreach { i =>
+      docs.filter(pmod(col("doc_id"), lit(nFiles)) === i).coalesce(1)
+        .write.parquet(s"$base/docs/p$i")
+      new java.io.File(s"$base/docs/p$i").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+        .foreach(_.setLastModified(1700000000000L + i * 1000L))
+    }
+    val schema = spark.read.parquet(s"$base/docs/p0").schema
+    def start(run: String) =
+      CorpusStream.nearDupScreenStateful(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 1).parquet(s"$base/docs/*/"))
+        .writeStream.format("parquet").option("path", s"$base/out-$run")
+        .option("checkpointLocation", s"$base/ckpt-$run")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    def hits(run: String) = spark.read.parquet(s"$base/out-$run")
+      .as[CorpusStream.ScreenHit].collect().toSeq
+      .sortBy(h => (h.doc_id, h.dup_of, h.band))
+    try {
+      spark.conf.set(key,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // kill as soon as a batch with input rows has committed
+      val killed = start("killed")
+      while (killed.isActive &&
+          killed.recentProgress.map(_.numInputRows).sum < 1) Thread.sleep(10)
+      killed.stop()
+      killed.awaitTermination()
+      val atKill = killed.recentProgress.map(_.numInputRows).sum
+      assert(atKill > 0, "kill landed before any batch committed")
+      assert(atKill < nDocs, s"kill missed: all $nDocs rows committed before stop")
+      start("killed").awaitTermination()   // restart from the checkpoint
+      start("clean").awaitTermination()    // uninterrupted reference
+      val ref = hits("clean")
+      assert(ref.nonEmpty, "sf0.01 documents produced no hits: parity is vacuous")
+      assert(hits("killed") == ref)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("nearDupScreenStateful: batch-frame parity (state starts empty, min id anchors)") {
     import graft.streaming.CorpusStream
     val docs = Seq(
