@@ -1052,10 +1052,9 @@ object SparkEntry {
         .unionByName(docs.filter(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 1))
         .repartition(fan).localCheckpoint()
       val st1 = {
+        // the shingle and size segments are already checkpointed
         val b = IncrementalCuration.bootstrapState(v1, "text", "doc_id")
-        b.copy(edges = b.edges.localCheckpoint(),
-          shingles = b.shingles.localCheckpoint(),
-          sizes = b.sizes.localCheckpoint())
+        b.copy(edges = b.edges.localCheckpoint())
       }
       val st2 = IncrementalCuration.applyTransition(st1,
         IncrementalCuration.transitionState(v1, v2, st1, "text", "doc_id"),

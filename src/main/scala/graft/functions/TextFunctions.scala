@@ -70,7 +70,27 @@ object TextFunctions {
   private[graft] def tokenCountBpeIshRegex(c: Column): Column =
     size(regexp_extract_all(c, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
 
-  /** Distinct word n-gram shingles joined with '_'.
+  /** Distinct word n-gram shingles joined with '_', first occurrence
+    * kept, in document order — the set every exact near-dup screen
+    * hashes. One native codegen'd loop over [[tokens]]
+    * (`plans.WordNGrams` with `distinct`); documents shorter than `n`
+    * words yield an empty array, null text a null one.
+    */
+  def shingles(c: Column, n: Int = 3): Column =
+    graft.plans.WordNGrams.ngrams(tokens(c), n, distinct = true)
+
+  /** Word n-grams in document order, duplicates kept — the multiset the
+    * repetition-quality metrics count over ([[shingles]] is the distinct
+    * form). Same native kernel, `plans.WordNGrams`.
+    */
+  def ngrams(c: Column, n: Int): Column =
+    graft.plans.WordNGrams.ngrams(tokens(c), n, distinct = false)
+
+  /** The composed-built-ins formulation [[ngrams]] / [[shingles]]
+    * replaced — kept ONLY as the equivalence witness for
+    * WordNGramsSpec (values and schema). Never use in a pipeline:
+    * `zip_with` and `filter` are higher-order, hence CodegenFallback, so
+    * every gram runs through an interpreted lambda.
     *
     * Built with `zip_with` over shifted slices, NOT `transform(sequence)`
     * + `element_at`: expressions referenced inside a lambda body are
@@ -78,25 +98,20 @@ object TextFunctions {
     * regex `split` O(len²) times per document — measured 5-10× slower on
     * real corpora. Here each slice is evaluated once per row.
     * `zip_with` pads the shorter (shifted) array with nulls; those
-    * become null shingles and are filtered, which also makes documents
+    * become null grams and are filtered, which also makes documents
     * shorter than `n` words yield an empty array with no special guard.
+    * `distinct` applies `array_distinct` (the [[shingles]] form).
     */
-  def shingles(c: Column, n: Int = 3): Column =
-    array_distinct(ngrams(c, n))
-
-  /** Word n-grams in document order, duplicates kept — the multiset the
-    * repetition-quality metrics count over ([[shingles]] = this +
-    * `array_distinct`). Same zip_with-over-shifted-slices construction
-    * (each slice evaluated once per row, not per element).
-    */
-  def ngrams(c: Column, n: Int): Column = {
+  private[graft] def ngramsComposed(c: Column, n: Int,
+                                    distinct: Boolean): Column = {
     val ws = tokens(c)
     val joined = (1 until n).foldLeft(ws: Column) { (acc, j) =>
       zip_with(acc, slice(ws, lit(j + 1), size(ws)),
         (a, b) => when(a.isNull || b.isNull, lit(null))
           .otherwise(concat(a, lit("_"), b)))
     }
-    filter(joined, x => x.isNotNull)
+    val grams = filter(joined, x => x.isNotNull)
+    if (distinct) array_distinct(grams) else grams
   }
 
   /** Repetition-quality signals (the Gopher-rules family): duplicate

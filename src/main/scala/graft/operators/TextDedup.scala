@@ -123,8 +123,7 @@ object TextDedup {
     val newSets = shingleSetsGuarded(newDocs, textCol, idCol, n)
     val corpSets = shingleSetsGuarded(corpus, textCol, idCol, n)
     def hashed(sets: DataFrame, as: String) =
-      sets.select(col("doc").as(as), explode(col("set")).as("s0"))
-        .select(col(as), xxhash64(col("s0")).as("s"))
+      hashedRows(sets).withColumnRenamed("doc", as)
     def sizes(sets: DataFrame, as: String, szAs: String) =
       sets.select(col("doc").as(as), size(col("set")).as(szAs))
         .filter(col(szAs) > 0)
@@ -154,17 +153,32 @@ object TextDedup {
     */
   def hashedShingles(docs: DataFrame, textCol: String, idCol: String,
                      n: Int = 3): DataFrame =
-    shingleSetsGuarded(docs, textCol, idCol, n)
-      .select(col("doc"), explode(col("set")).as("s0"))
+    hashedRows(shingleSetsGuarded(docs, textCol, idCol, n))
+
+  /** (doc, s) rows of a (doc, set) frame, one xxhash64 per shingle.
+    * `explode_outer` plus a null filter on the element, NOT `explode`:
+    * for an `explode`, Catalyst's InferFiltersFromGenerate adds
+    * `size(set) > 0 AND isnotnull(set)` below the Generate and pushes it
+    * through the projection that computes `set`, so the whole shingling
+    * (regex split + n-gram kernel) ran three times per document. The
+    * outer form infers no filter; it emits one null element for an
+    * empty or null set, which the filter drops. Shingle sets hold no
+    * null elements, so the rows are exactly `explode`'s.
+    */
+  private def hashedRows(sets: DataFrame): DataFrame =
+    sets.select(col("doc"), explode_outer(col("set")).as("s0"))
+      .filter(col("s0").isNotNull)
       .select(col("doc"), xxhash64(col("s0")).as("s"))
 
   /** (doc, sz) distinct-shingle-set sizes, sz > 0 — the denominator
     * side of the persisted exact screen (pairs with [[hashedShingles]]).
+    * `sz` is declared non-null (the filter drops null-text docs), the
+    * schema of the count-derived sizes the shingle store persists.
     */
   def shingleSizes(docs: DataFrame, textCol: String, idCol: String,
                    n: Int = 3): DataFrame =
     shingleSetsGuarded(docs, textCol, idCol, n)
-      .select(col("doc"), size(col("set")).as("sz"))
+      .select(col("doc"), coalesce(size(col("set")), lit(0)).as("sz"))
       .filter(col("sz") > 0)
 
   /** [[jaccardPairsCross]] against a PERSISTED corpus shingle store —
@@ -190,9 +204,7 @@ object TextDedup {
                               textCol: String, idCol: String,
                               n: Int = 3, threshold: Double = 0.8): DataFrame = {
     val newSets = shingleSetsGuarded(newDocs, textCol, idCol, n)
-    jaccardPairsCrossStoredFromHashed(
-      newSets.select(col("doc"), explode(col("set")).as("s0"))
-        .select(col("doc"), xxhash64(col("s0")).as("s")),
+    jaccardPairsCrossStoredFromHashed(hashedRows(newSets),
       newSets.select(col("doc"), size(col("set")).as("sz"))
         .filter(col("sz") > 0),
       corpusShingles, corpusSizes, threshold)
@@ -246,8 +258,7 @@ object TextDedup {
 
   private def pairCommonCountsFromSets(shSets: DataFrame,
                                        maxPostings: Int): DataFrame = {
-    val sh = shSets.select(col("doc"), explode(col("set")).as("s0"))
-      .select(col("doc"), xxhash64(col("s0")).as("s"))
+    val sh = hashedRows(shSets)
     // Per-doc shingle-set size MAP-SIDE from the array (shingles() is
     // array_distinct'd, so size(array) IS the distinct count): a second
     // scan of the source text instead of a groupBy over the exploded
@@ -339,7 +350,7 @@ object TextDedup {
     // per-doc totals and the semi-join hits): unlike pairCommonCounts'
     // sizes, recomputing is the wrong trade here — the cached rows are
     // 16-byte (doc, hash) pairs, SMALLER than the text they derive
-    // from, while re-deriving them pays the n-gram zip_with + distinct
+    // from, while re-deriving them pays the tokenize + n-gram
     // construction a second time (measured 2.3× slower re-scanned).
     val cg = corpus
       .select(col(idCol).as("doc"),
@@ -387,7 +398,6 @@ object TextDedup {
     */
   def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
                         n: Int = 3, k: Int = 32): DataFrame = {
-    graft.plans.MinHashSig.register(df.sparkSession)
     // one-pass native expression (graft.plans.MinHashSig): signature per
     // row with NO shuffle — the explode+groupBy(min×k) formulation costs
     // an exchange over every (doc, shingle) pair. Docs with no shingles
@@ -396,7 +406,7 @@ object TextDedup {
         TextFunctions.shingles(col(textCol), n).as("_sh"))
       .filter(size(col("_sh")) > 0)
     sh.select(col("doc"),
-      call_function("minhash_sig", col("_sh"), lit(k)).as("sig"))
+      graft.plans.MinHashSig.sig(col("_sh"), k).as("sig"))
   }
 
   /** Shuffle-based signature formulation (explode → groupBy partial min):
@@ -688,10 +698,9 @@ object TextDedup {
     * Empty docs are excluded, matching the aggregate form.
     */
   def simhashSignatures(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    graft.plans.SimHashSig.register(df.sparkSession)
     df.select(col(idCol).as("doc"), TextFunctions.tokens(col(textCol)).as("_t"))
       .filter(size(col("_t")) > 0)
-      .select(col("doc"), call_function("simhash_sig", col("_t")).as("simhash"))
+      .select(col("doc"), graft.plans.SimHashSig.sig(col("_t")).as("simhash"))
   }
 
   /** Engine-PORTABLE SimHash twin of [[simhashPairs]]: token hash = the

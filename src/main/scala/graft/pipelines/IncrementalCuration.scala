@@ -41,6 +41,12 @@ import org.apache.spark.sql.functions._
   * the q_inc_curate oracle IS the full recompute, so the driver's green
   * row is the cross-engine proof, and the spec asserts it per version.
   *
+  * Every publish shingles its text ONCE: the bootstrap hashes the whole
+  * corpus in one checkpointed pass and derives the ledger, the shingle
+  * segment and the size segment from it; a release does the same over
+  * its delta (`hashOnce`). IncrementalCurationSpec pins the bootstrap's
+  * single shingle stage.
+  *
   * Hot-shingle caps are deliberately ABSENT here: a cap's drop decision
   * depends on corpus-wide posting counts, which breaks the per-pair
   * determinism the ledger identity needs. The capped/banded production
@@ -186,7 +192,30 @@ object IncrementalCuration {
   def validSizes(st: LedgerState): DataFrame =
     validRows(st.sizes, st.tomb).select("doc", "sz")
 
-  /** Version-0 state: full ledger + the bootstrap shingle segment. */
+  /** ONE shingle+hash pass over `docs`' text, checkpointed, and the
+    * (doc, sz) set sizes counted over it: explode emits one row per
+    * distinct shingle string, so the count IS size(set). The bootstrap
+    * and every release share the result four ways — pair generation,
+    * the cross screen (releases), and both store segments — so the
+    * text is shingled exactly once per publish, in one stage (unshared,
+    * each consumer re-shingled the text in its own stage; a release's
+    * delta re-shingling was measured as its dominant delta-side term at
+    * sf10).
+    */
+  private def hashOnce(docs: DataFrame, textCol: String, idCol: String,
+                       n: Int): (DataFrame, DataFrame) = {
+    val dh = TextDedup.hashedShingles(docs, textCol, idCol, n).localCheckpoint()
+    val dsz = dh.groupBy("doc").agg(count(lit(1)).cast("int").as("sz"))
+      .localCheckpoint()
+    (dh, dsz)
+  }
+
+  /** Version-0 state: full ledger + the bootstrap shingle segment, all
+    * from one shingle+hash pass over the corpus ([[hashOnce]]): the
+    * ledger is [[TextDedup.jaccardPairsFromHashed]] over the same rows
+    * the segments hold, row-identical to [[fullEdges]] /
+    * [[TextDedup.hashedShingles]] / [[TextDedup.shingleSizes]].
+    */
   def bootstrapState(docs: DataFrame, textCol: String, idCol: String,
                      n: Int = 3, threshold: Double = 0.8): LedgerState = {
     val spark = docs.sparkSession
@@ -197,12 +226,12 @@ object IncrementalCuration {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("before_rel",
           org.apache.spark.sql.types.IntegerType))))
+    val (dh, dsz) = hashOnce(docs, textCol, idCol, n)
     LedgerState(0,
-      fullEdges(docs, textCol, idCol, n, threshold),
-      TextDedup.hashedShingles(docs, textCol, idCol, n)
-        .withColumn("rel", lit(0)),
-      TextDedup.shingleSizes(docs, textCol, idCol, n)
-        .withColumn("rel", lit(0)),
+      TextDedup.jaccardPairsFromHashed(dh, dsz, threshold)
+        .select("doc_a", "doc_b"),
+      dh.withColumn("rel", lit(0)),
+      dsz.withColumn("rel", lit(0)),
       emptyTomb)
   }
 
@@ -251,13 +280,8 @@ object IncrementalCuration {
     val delta = newCorpus.join(broadcast(affected), Seq(idCol), "left_semi")
     // ONE shingle+hash pass over the delta's text, shared by the
     // within-delta pairs, the cross screen's new side, AND the store's
-    // new segments (unshared, the release re-shingled the delta ~6× —
-    // measured as the dominant delta-side term at sf10). Sizes come
-    // from a count over the checkpointed hashes: explode emits one row
-    // per distinct shingle string, so the count IS size(set).
-    val dh = TextDedup.hashedShingles(delta, textCol, idCol, n).localCheckpoint()
-    val dsz = dh.groupBy("doc").agg(count(lit(1)).cast("int").as("sz"))
-      .localCheckpoint()
+    // new segments
+    val (dh, dsz) = hashOnce(delta, textCol, idCol, n)
     val within = TextDedup.jaccardPairsFromHashed(dh, dsz, threshold)
       .select("doc_a", "doc_b")
     val staleDocs = stale.withColumnRenamed(idCol, "doc")
@@ -431,10 +455,8 @@ object IncrementalCuration {
       s"publishDrop: $present of $nDelta drop ids already live — not a " +
         "pure-add drop (changed/removed docs need publishIncrement's diff)")
     // one shingle+hash pass over the drop, shared four ways (within
-    // pairs, cross screen, both store segments) — see transitionState
-    val dh = TextDedup.hashedShingles(delta, textCol, idCol, n).localCheckpoint()
-    val dsz = dh.groupBy("doc").agg(count(lit(1)).cast("int").as("sz"))
-      .localCheckpoint()
+    // pairs, cross screen, both store segments)
+    val (dh, dsz) = hashOnce(delta, textCol, idCol, n)
     val within = TextDedup.jaccardPairsFromHashed(dh, dsz, threshold)
       .select("doc_a", "doc_b")
     val cross = TextDedup.jaccardPairsCrossStoredFromHashed(dh, dsz,

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.{Column, GraftColumnShim}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -90,11 +91,7 @@ case class MinHashSig(child: Expression, k: Int)
 }
 
 object MinHashSig {
-  /** Register `minhash_sig(arr, k)` for SQL / call_function use. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => MinHashSig(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
+  /** Column-level entry: wraps the expression directly (no registry). */
+  def sig(arr: Column, k: Int): Column =
+    GraftColumnShim.column(MinHashSig(GraftColumnShim.expression(arr), k))
 }

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.{Column, GraftColumnShim}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -82,7 +83,7 @@ case class SimHashSig(child: Expression) extends UnaryExpression {
 }
 
 object SimHashSig {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_sig", exprs => SimHashSig(exprs.head), "built-in")
+  /** Column-level entry: wraps the expression directly (no registry). */
+  def sig(arr: Column): Column =
+    GraftColumnShim.column(SimHashSig(GraftColumnShim.expression(arr)))
 }

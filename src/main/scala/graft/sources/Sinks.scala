@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Sink-side utilities (SURVEY.md §2.2).
   *
@@ -536,7 +537,38 @@ object Sinks {
                seq: Int): DataFrame = {
       val refs = refsAt(spark, root, seq)
       require(!refs.isEmptyData, s"version $seq under $root has no data refs")
-      spark.read.parquet(scanPaths(root, refs): _*)
+      spark.read.schema(storedSchema(spark, root, refs))
+        .parquet(scanPaths(root, refs): _*)
+    }
+
+    /** The schema `spark.read.parquet` would infer for a version, read
+      * in this process, without a Spark job, from the Spark schema
+      * Spark's parquet writer stores in every footer (the row-metadata
+      * key). Inference reads the same key from the version's first data
+      * file, but in a Spark job — one job per versioned read, for files
+      * this store wrote itself. The reader makes the schema nullable
+      * either way, so the explicit schema reads identically
+      * (VersionedDeltaSpec pins it, nullability included). Every file of
+      * a version holds one schema (the scan unions file lists), so the
+      * first file's is the version's. Every write path of the store goes
+      * through Spark's parquet writer, so a file without the key is not
+      * the store's and fails the read.
+      */
+    private def storedSchema(spark: org.apache.spark.sql.SparkSession,
+                             root: String,
+                             refs: ManifestRefs): StructType = {
+      val first = refs.dirs.iterator.flatMap(d => listPartFiles(spark, root, d))
+        .nextOption().orElse(refs.files.headOption)
+      require(first.isDefined, s"versioned read under $root lists no data files")
+      val path = new Path(root, first.get)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          path, spark.sparkContext.hadoopConfiguration))
+      val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        finally reader.close()
+      require(json != null, s"$path carries no Spark schema in its footer")
+      DataType.fromJson(json).asInstanceOf[StructType]
     }
 
     /** The live version's seq and data dir, from the max-seq manifest.

@@ -230,4 +230,60 @@ class IncrementalCurationSpec extends SparkSpec {
         IncrementalCuration.curatedAt(spark, root, 2), s"prefix $prefixLen v3")
     }
   }
+  test("bootstrapState ≡ fullEdges, hashedShingles and shingleSizes on sf0.001 (rows and schema)") {
+    import graft.operators.TextDedup
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val st = IncrementalCuration.bootstrapState(docs, "text", "doc_id")
+    def same(got: DataFrame, want: DataFrame, label: String): Unit = {
+      assert(got.schema === want.schema, s"$label schema")
+      assert(sortedRows(got) === sortedRows(want), s"$label rows")
+    }
+    same(st.edges, IncrementalCuration.fullEdges(docs, "text", "doc_id"), "edges")
+    same(st.shingles.drop("rel"), TextDedup.hashedShingles(docs, "text", "doc_id"),
+      "shingle segment")
+    same(st.sizes.drop("rel"), TextDedup.shingleSizes(docs, "text", "doc_id"),
+      "size segment")
+    assert(st.shingles.filter(col("rel") =!= 0).isEmpty &&
+      st.sizes.filter(col("rel") =!= 0).isEmpty)
+    assert(!st.shingles.isEmpty && !st.sizes.isEmpty)
+  }
+
+  test("a bootstrap shingles the corpus text in exactly one stage") {
+    // the text column passes through a recording identity UDF: every
+    // stage that reads (and so shingles) the text records its id
+    TextReads.reset()
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id").cast("long").as("doc_id"),
+        TextReads.through(col("text")).as("text"))
+    val nDocs = Tables.documents(spark, sf).count()
+    val st = IncrementalCuration.bootstrapState(docs, "text", "doc_id")
+    st.edges.collect(); st.shingles.collect(); st.sizes.collect()
+    assert(TextReads.stages.size === 1,
+      s"ledger and segments read the text in stages ${TextReads.stages}")
+    assert(TextReads.rows.get === nDocs)
+    // a full bootstrap publish: the one shingle pass, plus the corpus
+    // snapshot's write
+    TextReads.reset()
+    val root = java.nio.file.Files.createTempDirectory("inc-boot").toString
+    assert(IncrementalCuration.bootstrap(docs, root, "text", "doc_id") === 0)
+    assert(TextReads.stages.size === 2,
+      s"bootstrap read the text in stages ${TextReads.stages}")
+    assert(TextReads.rows.get === 2 * nDocs)
+  }
+}
+
+/** Records the stages and rows in which a text column is read (the
+  * test session is local, so tasks run in this JVM). */
+object TextReads {
+  val stages: java.util.Set[Integer] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+  val rows = new java.util.concurrent.atomic.AtomicLong
+  def reset(): Unit = { stages.clear(); rows.set(0) }
+  private val record = org.apache.spark.sql.functions.udf { (s: String) =>
+    stages.add(org.apache.spark.TaskContext.get().stageId())
+    rows.incrementAndGet()
+    s
+  }
+  def through(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = record(c)
 }

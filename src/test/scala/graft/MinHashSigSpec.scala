@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.TextDedup
+import graft.plans.{MinHashSig, SimHashSig}
 import org.apache.spark.sql.functions._
 
 /** Native MinHashSig expression: codegen vs interpreted parity, shape,
@@ -30,16 +31,15 @@ class MinHashSigSpec extends SparkSpec {
   }
 
   test("codegen and interpreted eval agree") {
-    graft.plans.MinHashSig.register(spark)
     val df = docs.select(col("doc_id"),
-      call_function("minhash_sig", split(col("text"), " "), lit(8)).as("sig"))
+      MinHashSig.sig(split(col("text"), " "), 8).as("sig"))
     val wholestage = df.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val prev = spark.conf.get("spark.sql.codegen.wholeStage")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try {
       val interpreted = docs.select(col("doc_id"),
-        call_function("minhash_sig", split(col("text"), " "), lit(8)).as("sig"))
+        MinHashSig.sig(split(col("text"), " "), 8).as("sig"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(wholestage == interpreted)
     } finally {
@@ -56,14 +56,13 @@ class MinHashSigSpec extends SparkSpec {
   }
 
   test("SimHashSig codegen and interpreted eval agree; no shuffle") {
-    graft.plans.SimHashSig.register(spark)
     val df = docs.select(col("doc_id"),
-      call_function("simhash_sig", split(col("text"), " ")).as("sig"))
+      SimHashSig.sig(split(col("text"), " ")).as("sig"))
     val codegen = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try {
       val interp = docs.select(col("doc_id"),
-        call_function("simhash_sig", split(col("text"), " ")).as("sig"))
+        SimHashSig.sig(split(col("text"), " ")).as("sig"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(codegen == interp)
     } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")

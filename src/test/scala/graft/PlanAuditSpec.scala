@@ -300,24 +300,24 @@ class PlanAuditSpec extends SparkSpec {
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       val prev = docs.filter(col("doc_id") % 7 =!= 0)
       val st0 = IncrementalCuration.bootstrapState(prev, "text", "doc_id")
-      val st = st0.copy(edges = st0.edges.localCheckpoint(),
-        shingles = st0.shingles.localCheckpoint(),
-        sizes = st0.sizes.localCheckpoint())
+      val st = st0.copy(edges = st0.edges.localCheckpoint())
       val t = IncrementalCuration.transitionState(prev, docs, st, "text", "doc_id")
+      // the shingle store's scans are the checkpointed RDDs its segment
+      // reads; the delta's own checkpointed hash frame has the same
+      // (doc, s) columns but another RDD
+      def rddScans(p: org.apache.spark.sql.execution.SparkPlan) =
+        p.collectLeaves().collect { case r: RDDScanExec => r.rdd.id }
+      val storeRdds = rddScans(st.shingles.queryExecution.executedPlan).toSet
+      assert(storeRdds.nonEmpty, "the shingle segment reads no checkpointed RDD")
       // an exchange is an offender only if it moves RAW store rows —
-      // its own output still carries the hash column `s` AND a STORE
-      // segment scan feeds it (the store's RDD scans are the ones
-      // carrying the `rel` column; the delta's checkpointed hash frame
-      // is (doc, s) only). Downstream exchanges over match-bound
+      // its own output still carries the hash column `s` AND a store
+      // segment scan feeds it. Downstream exchanges over match-bound
       // join/agg outputs and the delta's own posting/distinct shuffles
       // are legitimate.
       val offenders = t.newEdges.queryExecution.executedPlan.collect {
         case e: ShuffleExchangeExec
-          if e.child.output.exists(_.name == "s") && e.collectLeaves().exists {
-            case r: RDDScanExec =>
-              r.output.exists(_.name == "s") && r.output.exists(_.name == "rel")
-            case _ => false
-          } => e
+          if e.child.output.exists(_.name == "s") &&
+            rddScans(e).exists(storeRdds) => e
       }
       assert(offenders.isEmpty,
         s"shingle store shuffled by:\n${offenders.map(_.simpleStringWithNodeId()).mkString("\n")}")

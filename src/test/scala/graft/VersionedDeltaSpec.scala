@@ -177,4 +177,60 @@ class VersionedDeltaSpec extends SparkSpec {
     assert(seen.size() > 0 && seen.asScala.forall(ok),
       s"reader observed a partial layout: ${seen.asScala.toSeq.sorted}")
   }
+  test("readAt takes its schema from the footer: equal to inference, nullability included, no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = Files.createTempDirectory("vschema").toString + "/tbl"
+    // non-nullable columns, nested nullability, and the types whose
+    // inference the session confs steer (timestamps, decimals)
+    val frame = spark.range(0, 50, 1, 3).select(
+      col("id"),
+      (col("id") * 2).cast("int").as("i"),
+      lit("c").as("s_const"),
+      when(col("id") % 5 === 0, lit(null)).otherwise(col("id").cast("string")).as("s"),
+      array(col("id"), col("id") + 1).as("arr"),
+      struct(col("id").as("a"), lit(1.5).as("b")).as("st"),
+      map(lit("k"), col("id")).as("m"),
+      timestamp_seconds(col("id") * 1000).as("ts"),
+      date_from_unix_date(col("id").cast("int")).as("d"),
+      col("id").cast("decimal(12,3)").as("dec"))
+    assert(!frame.schema("id").nullable && !frame.schema("s_const").nullable)
+    assert(Sinks.Versioned.write(frame, root) == 0)
+    assert(Sinks.Versioned.writeDelta(frame.limit(7), root) == 1)
+    assert(Sinks.Versioned.compact(spark, root) == 2)
+    for (seq <- 0 to 2) {
+      val got = Sinks.Versioned.readAt(spark, root, seq)
+      val inferred = spark.read.parquet(got.inputFiles.toSeq: _*)
+      assert(got.schema == inferred.schema, s"v$seq: ${got.schema} vs ${inferred.schema}")
+      assert(got.orderBy("id").collect().toSeq == inferred.orderBy("id").collect().toSeq,
+        s"v$seq rows")
+    }
+    // the versioned read itself launches no Spark job: jobs are counted
+    // by group, and a marker job after the reads flushes the async bus
+    val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val readJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == "vschema-read") readJobs.incrementAndGet(): Unit
+        if (g != null) groups.add(g): Unit
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("vschema-read", "versioned reads")
+      (0 to 2).foreach(seq => Sinks.Versioned.readAt(spark, root, seq))
+      Sinks.Versioned.read(spark, root)
+      sc.setJobGroup("vschema-marker", "listener flush")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("vschema-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains("vschema-marker"), "listener never saw the marker job")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(readJobs.get == 0, s"${readJobs.get} jobs started by versioned reads")
+  }
 }
