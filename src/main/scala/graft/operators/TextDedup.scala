@@ -30,18 +30,17 @@ object TextDedup {
       .agg(min(idCol).as("canonical_id"), count(lit(1)).as("n_copies"))
 
   /** Exact near-dup oracle: all pairs with shingle-Jaccard ≥ threshold.
-    * Exploded-shingle self-join: |A∩B| via join on shingle, |A∪B| from
-    * per-doc sizes. Correct but quadratic in the worst case — use for
-    * verification and small corpora; LSH below for scale.
+    * Posting-list pair generation over the hashed shingle stream:
+    * |A∩B| from shared shingle hashes, |A∪B| from per-doc sizes. Correct
+    * but quadratic in the worst case — use for verification and small
+    * corpora; LSH below for scale.
     */
   def jaccardPairs(df: DataFrame, textCol: String, idCol: String,
                    n: Int = 3, threshold: Double = 0.8,
-                   maxPostings: Int = Int.MaxValue): DataFrame =
-    pairCommonCounts(df, textCol, idCol, n, maxPostings)
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("sz_a") + col("sz_b") - col("common")))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+                   maxPostings: Int = Int.MaxValue): DataFrame = {
+    val sh = hashedShingles(df, textCol, idCol, n)
+    jaccardPairsFromHashed(sh, sizesFromHashed(sh), threshold, maxPostings)
+  }
 
   /** Subset-duplicate pairs by MAX-CONTAINMENT (Broder): |A∩B| / min(|A|,
     * |B|) ≥ threshold. Symmetric Jaccard misses a short document fully
@@ -52,29 +51,13 @@ object TextDedup {
     */
   def containmentPairs(df: DataFrame, textCol: String, idCol: String,
                        n: Int = 3, threshold: Double = 0.8,
-                       maxPostings: Int = Int.MaxValue): DataFrame =
-    pairCommonCounts(df, textCol, idCol, n, maxPostings)
+                       maxPostings: Int = Int.MaxValue): DataFrame = {
+    val sh = hashedShingles(df, textCol, idCol, n)
+    pairCommonCountsFromHashed(sh, sizesFromHashed(sh), maxPostings)
       .withColumn("containment",
         col("common").cast("double") / least(col("sz_a"), col("sz_b")))
       .filter(col("containment") >= threshold)
       .select("doc_a", "doc_b", "containment")
-
-  /** Shared core of the exact near-dup metrics: one row per candidate
-    * pair with the common-shingle count and both docs' shingle-set
-    * sizes — (doc_a, doc_b, common, sz_a, sz_b).
-    */
-  private def pairCommonCounts(df: DataFrame, textCol: String, idCol: String,
-                               n: Int, maxPostings: Int): DataFrame = {
-    // Join on the 64-bit shingle hash, not the shingle string: the
-    // exploded self-join shuffles 8-byte keys instead of ~8·n-byte
-    // strings. Counts are unchanged short of an xxhash64 collision
-    // *within one document pair* (~2^-64 per shingle pair — negligible).
-    //
-    // Doc-id guard: pair keys are packed as (a << 32) | b, which silently
-    // corrupts for negative ids or ids >= 2^32 (e.g. xxhash64-derived) —
-    // assert the packable range per row instead of trusting a comment.
-    pairCommonCountsFromSets(shingleSetsGuarded(df, textCol, idCol, n),
-      maxPostings)
   }
 
   /** (doc, set) pre-shingled form with the packed-pair-key id guard —
@@ -99,57 +82,19 @@ object TextDedup {
       TextFunctions.shingles(col(textCol), n).as("set"))
   }
 
-  /** Exact cross-frame Jaccard pairs: every (new, corpus) doc pair with
-    * shingle-Jaccard ≥ threshold, new-side × corpus-side only (the two
-    * id sets must be disjoint; within-side pairs come from
-    * [[jaccardPairs]] on that side). This is the EXACT counterpart of
-    * [[crossCorpusNearDups]] — use it where the incremental result must
-    * be row-identical to a full [[jaccardPairs]] recompute restricted
-    * to pairs touching the delta (the [[graft.pipelines
-    * .IncrementalCuration]] edge-ledger contract); use the banded LSH
-    * form for 100 TB screens that tolerate banding recall.
-    *
-    * Scale shape: both sides reduce to 8-byte shingle hashes before the
-    * join — the shuffle never carries shingle text. The pair population
-    * is DELTA-DRIVEN: a corpus shingle row survives the join only if
-    * the delta shares the hash, and when the delta is small Spark
-    * broadcasts its hashed stream, so the corpus never shuffles at all
-    * (the monthly-drop shape). Quadratic cost exists only inside
-    * shared-shingle groups, exactly like [[jaccardPairs]].
-    */
-  def jaccardPairsCross(newDocs: DataFrame, corpus: DataFrame,
-                        textCol: String, idCol: String,
-                        n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    val newSets = shingleSetsGuarded(newDocs, textCol, idCol, n)
-    val corpSets = shingleSetsGuarded(corpus, textCol, idCol, n)
-    def hashed(sets: DataFrame, as: String) =
-      hashedRows(sets).withColumnRenamed("doc", as)
-    def sizes(sets: DataFrame, as: String, szAs: String) =
-      sets.select(col("doc").as(as), size(col("set")).as(szAs))
-        .filter(col(szAs) > 0)
-    val common = hashed(newSets, "new_id")
-      .join(hashed(corpSets, "corpus_id"), Seq("s"))
-      .filter(col("new_id") =!= col("corpus_id"))
-      .groupBy("new_id", "corpus_id").agg(count(lit(1)).as("common"))
-    common
-      .join(sizes(newSets, "new_id", "sz_new"), Seq("new_id"))
-      .join(sizes(corpSets, "corpus_id", "sz_corpus"), Seq("corpus_id"))
-      .withColumn("jaccard", col("common").cast("double") /
-        (col("sz_new") + col("sz_corpus") - col("common")))
-      .filter(col("jaccard") >= threshold)
-      .select("new_id", "corpus_id", "jaccard")
-  }
-
-  /** (doc, s) hashed-shingle rows — the persistable EXACT-screen
-    * analogue of [[bandedSignatures]]: write it once per corpus state
-    * and every release's delta×unchanged screen reads pre-hashed longs
-    * instead of re-shingling the unchanged side's text
-    * ([[jaccardPairsCrossStored]]). Bit-compatible with the streams
-    * [[jaccardPairs]]/[[jaccardPairsCross]] build in-flight (same
-    * shingling, same xxhash64), including their collision behavior —
-    * a hash shared by two distinct shingles of one doc emits two rows
-    * here exactly as the in-flight explode does, so a screen over the
-    * store is row-identical to one over the text.
+  /** (doc, s) hashed-shingle rows — the one input of every exact-pair
+    * path ([[jaccardPairs]], [[containmentPairs]], the incremental
+    * ledger) and the persistable EXACT-screen analogue of
+    * [[bandedSignatures]]: write it once per corpus state and every
+    * release's delta×unchanged screen reads pre-hashed longs instead of
+    * re-shingling the unchanged side's text
+    * ([[jaccardPairsCrossStoredFromHashed]]). Join on the 64-bit
+    * shingle hash, not the shingle string: the pair shuffles carry
+    * 8-byte keys instead of ~8·n-byte strings. Counts are unchanged
+    * short of an xxhash64 collision *within one document pair* (~2^-64
+    * per shingle pair — negligible); a hash shared by two distinct
+    * shingles of one doc emits two rows, so a screen over a persisted
+    * copy is row-identical to one over the text.
     */
   def hashedShingles(docs: DataFrame, textCol: String, idCol: String,
                      n: Int = 3): DataFrame =
@@ -170,51 +115,50 @@ object TextDedup {
       .filter(col("s0").isNotNull)
       .select(col("doc"), xxhash64(col("s0")).as("s"))
 
-  /** (doc, sz) distinct-shingle-set sizes, sz > 0 — the denominator
+  /** (doc, sz) distinct-shingle-set sizes of a (doc, s) stream — the ONE
+    * size rule of every exact-pair path and of the persisted size
+    * store. `sz` is the row count per doc: the stream holds one row per
+    * distinct shingle string, so the count IS size(set), and a doc with
+    * no shingles has no row (sz > 0 without a filter). `sz` is a
+    * non-null int. A size(set) projection would shingle the text in a
+    * stage of its own, and Catalyst pushes its `sz > 0` filter below
+    * the shingling, which shingles it once more. The count is cheap:
+    * explode output is contiguous per doc, so the partial aggregate
+    * ships one row per doc per task.
+    */
+  def sizesFromHashed(hashed: DataFrame): DataFrame =
+    hashed.groupBy("doc").agg(count(lit(1)).cast("int").as("sz"))
+
+  /** (doc, sz) sizes of `docs`' shingle sets, sz > 0 — the denominator
     * side of the persisted exact screen (pairs with [[hashedShingles]]).
-    * `sz` is declared non-null (the filter drops null-text docs), the
-    * schema of the count-derived sizes the shingle store persists.
     */
   def shingleSizes(docs: DataFrame, textCol: String, idCol: String,
                    n: Int = 3): DataFrame =
-    shingleSetsGuarded(docs, textCol, idCol, n)
-      .select(col("doc"), coalesce(size(col("set")), lit(0)).as("sz"))
-      .filter(col("sz") > 0)
+    sizesFromHashed(hashedShingles(docs, textCol, idCol, n))
 
-  /** [[jaccardPairsCross]] against a PERSISTED corpus shingle store —
-    * `corpusShingles` (doc, s) and `corpusSizes` (doc, sz) as built by
-    * [[hashedShingles]]/[[shingleSizes]] (usually reloaded from
-    * parquet). Row-identical to the in-flight form on the same inputs;
-    * the corpus text is never touched.
+  /** Exact cross-frame Jaccard pairs from pre-hashed (doc, s) / (doc,
+    * sz) frames ([[hashedShingles]] / [[sizesFromHashed]]): every (new,
+    * corpus) doc pair with shingle-Jaccard ≥ threshold, new-side ×
+    * corpus-side only (the two id sets must be disjoint; within-side
+    * pairs come from [[jaccardPairsFromHashed]] on that side). This is
+    * the EXACT counterpart of [[crossCorpusNearDups]] — use it where the
+    * incremental result must be row-identical to a full [[jaccardPairs]]
+    * recompute restricted to pairs touching the delta (the
+    * [[graft.pipelines.IncrementalCuration]] edge-ledger contract); use
+    * the banded LSH form for 100 TB screens that tolerate banding
+    * recall. The corpus side is a persisted shingle store or a lazy
+    * [[hashedShingles]] stream — the kernel cannot tell them apart.
     *
-    * Scale shape: the store side is first pruned by a BROADCAST
+    * Scale shape: the corpus side is first pruned by a BROADCAST
     * semi-join on the delta's distinct shingle hashes — the corpus
-    * stream is scanned (pre-hashed longs, columnar) but never
-    * shuffled; only rows sharing a hash with the delta reach the pair
-    * join, so the shuffle is ∝ delta + matches, not corpus. The
-    * broadcast is delta-sized by contract (a monthly drop's distinct
-    * hashes); a release whose delta rivals the corpus should run the
-    * full [[jaccardPairs]] recompute instead — the prune buys nothing
-    * there and the broadcast would be corpus-sized. The sizes join
-    * stays unhinted: `common` is delta-bound, so AQE broadcasts it
-    * against the store's (doc, sz) scan.
-    */
-  def jaccardPairsCrossStored(newDocs: DataFrame, corpusShingles: DataFrame,
-                              corpusSizes: DataFrame,
-                              textCol: String, idCol: String,
-                              n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    val newSets = shingleSetsGuarded(newDocs, textCol, idCol, n)
-    jaccardPairsCrossStoredFromHashed(hashedRows(newSets),
-      newSets.select(col("doc"), size(col("set")).as("sz"))
-        .filter(col("sz") > 0),
-      corpusShingles, corpusSizes, threshold)
-  }
-
-  /** [[jaccardPairsCrossStored]] with the NEW side also pre-hashed —
-    * (doc, s) / (doc, sz) frames, usually one checkpointed
-    * [[hashedShingles]] pass shared with the within-delta pairs and
-    * the store's new segments, so a release shingles its delta's text
-    * exactly once.
+    * stream is scanned but never shuffled; only rows sharing a hash
+    * with the delta reach the pair join, so the shuffle is ∝ delta +
+    * matches, not corpus. The broadcast is delta-sized by contract (a
+    * monthly drop's distinct hashes); a release whose delta rivals the
+    * corpus should run the full [[jaccardPairs]] recompute instead —
+    * the prune buys nothing there and the broadcast would be
+    * corpus-sized. The sizes join stays unhinted: `common` is
+    * delta-bound, so AQE broadcasts it against the corpus's (doc, sz).
     */
   def jaccardPairsCrossStoredFromHashed(newHashed: DataFrame,
                                         newSizes: DataFrame,
@@ -240,12 +184,11 @@ object TextDedup {
   }
 
   /** [[jaccardPairs]] over a PRE-HASHED (doc, s) stream and its (doc,
-    * sz) set sizes — the share-one-hash-pass entry point: a release
-    * that already checkpointed [[hashedShingles]] of its delta (for
-    * the cross screen and the store segments) gets its within-delta
-    * pairs from the same frame instead of re-shingling the text.
-    * Row-identical to [[jaccardPairs]] on the frames [[hashedShingles]]
-    * / [[shingleSizes]] produce.
+    * sz) set sizes ([[hashedShingles]] / [[sizesFromHashed]]) — the
+    * share-one-hash-pass entry point: a release that already
+    * checkpointed its delta's hash frame (for the cross screen and the
+    * store segments) gets its within-delta pairs from the same frame
+    * instead of re-shingling the text.
     */
   def jaccardPairsFromHashed(hashed: DataFrame, sizes: DataFrame,
                              threshold: Double = 0.8,
@@ -256,23 +199,10 @@ object TextDedup {
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
 
-  private def pairCommonCountsFromSets(shSets: DataFrame,
-                                       maxPostings: Int): DataFrame = {
-    val sh = hashedRows(shSets)
-    // Per-doc shingle-set size MAP-SIDE from the array (shingles() is
-    // array_distinct'd, so size(array) IS the distinct count): a second
-    // scan of the source text instead of a groupBy over the exploded
-    // stream. At 100 TB that trade is strictly right — the exploded
-    // frame is ~n× the text and aggregating it costs a shuffle's map
-    // side plus (previously) a persist of the whole exploded stream;
-    // re-scanning the pruned (id, text) columns is cheaper than either.
-    // (When shSets is checkpointed — the recall report — the "re-scan"
-    // reads the materialized sets instead: cheaper still.)
-    val sizes = shSets.select(col("doc"), size(col("set")).as("sz"))
-      .filter(col("sz") > 0)
-    pairCommonCountsFromHashed(sh, sizes, maxPostings)
-  }
-
+  /** The within-set pair kernel behind every exact near-dup metric: one
+    * row per candidate pair with the common-shingle count and both
+    * docs' set sizes — (doc_a, doc_b, common, sz_a, sz_b).
+    */
   private def pairCommonCountsFromHashed(sh: DataFrame, sizes: DataFrame,
                                          maxPostings: Int): DataFrame = {
     // Group each shingle's posting list once and emit doc pairs from it,
@@ -294,9 +224,10 @@ object TextDedup {
     // so count(*) per shingle IS the posting size; no pre-distinct needed.
     // The hot-shingle pre-pass only runs when a cap is set: the default
     // (uncapped) form is the EXACT oracle and keeps the lean two-agg
-    // plan, where `sh` has exactly ONE consumer (the posting groupBy) —
-    // no persist needed. The capped path reads `sh` twice (hot counts +
-    // anti-join), so only IT persists the exploded stream; deliberately
+    // plan, where `sh` streams lazily into the posting groupBy (and the
+    // caller's size count) — no persist needed. The capped path reads
+    // `sh` twice more (hot counts + anti-join), so only IT persists the
+    // exploded stream, which the size count then reads too; deliberately
     // NOT unpersisted here — the returned frame is lazy and unpersisting
     // before the caller's action would recompute the pipeline twice.
     // Callers running many dedup jobs in one session should
@@ -347,8 +278,8 @@ object TextDedup {
   def contaminationReport(corpus: DataFrame, evalSet: DataFrame,
                           textCol: String, idCol: String, n: Int = 8): DataFrame = {
     // The hashed gram stream is PERSISTED and feeds both consumers (the
-    // per-doc totals and the semi-join hits): unlike pairCommonCounts'
-    // sizes, recomputing is the wrong trade here — the cached rows are
+    // per-doc totals and the semi-join hits): unlike the lazy exact-pair
+    // streams, recomputing is the wrong trade here — the cached rows are
     // 16-byte (doc, hash) pairs, SMALLER than the text they derive
     // from, while re-deriving them pays the tokenize + n-gram
     // construction a second time (measured 2.3× slower re-scanned).
@@ -636,17 +567,19 @@ object TextDedup {
     // the previous explode → groupBy(min×k) composition (spec'd against
     // it element-for-element) but map-side: the per-shingle exchange of
     // (doc, a, b) rows is gone, and only the band self-join shuffles.
-    // The empty-set filter reproduces the exploded form's semantics
-    // (docs with no shingles emitted no rows there); sig is never null
-    // past it because shingles() yields no null elements.
+    // The sig is NULL for an empty or null set, and such docs emit no
+    // rows, as in the exploded form. That drop is a filter on the
+    // GENERATOR's output (a null sig explodes to one null bucket): a
+    // filter on `set` or `sig` would be pushed below the projection
+    // that computes them and shingle each doc again (hashedRows' trap).
     val sigs = shSets
-      .filter(size(col("set")) > 0)
       .select(col("doc"), graft.plans.Md5MinHashSig.sig(col("set"), k).as("sig"))
-      .filter(col("sig").isNotNull)
     val bandCols = (0 until bands).map(b =>
       md5(concat_ws("|", slice(col("sig"), b * r + 1, r).cast("array<string>"))))
     sigs.select(col("doc"), col("sig"),
-      posexplode(array(bandCols: _*)).as(Seq("band", "bucket")))
+        posexplode_outer(when(col("sig").isNotNull, array(bandCols: _*)))
+          .as(Seq("band", "bucket")))
+      .filter(col("bucket").isNotNull)
   }
 
   /** Engine-portable twin of [[crossCorpusNearDups]] — same md5
@@ -956,10 +889,8 @@ object TextDedup {
     // md5 signatures). On the evaluation sample this is the dominant
     // fixed cost; everything downstream diverges by design.
     val shSets = shingleSetsGuarded(df, textCol, idCol, n).localCheckpoint()
-    val exact = pairCommonCountsFromSets(shSets, Int.MaxValue)
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("sz_a") + col("sz_b") - col("common")))
-      .filter(col("jaccard") >= threshold)
+    val sh = hashedRows(shSets)
+    val exact = jaccardPairsFromHashed(sh, sizesFromHashed(sh), threshold)
       .select(col("doc_a"), col("doc_b"), lit(1).as("_e"))
     val lsh = minhashLshPairsPortableBanded(
         portableBandedFromSets(shSets, k, bands), k, threshold)

@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   *
   * Near-dup pair generation is PER-PAIR DETERMINISTIC: whether (a, b)
   * is a qualifying pair depends only on the two texts, never on the
-  * rest of the corpus (uncapped [[TextDedup.jaccardPairs]] /
-  * [[TextDedup.jaccardPairsCross]]). Therefore the full pair set of
-  * version v+1 decomposes exactly:
+  * rest of the corpus (uncapped [[TextDedup.jaccardPairsFromHashed]] /
+  * [[TextDedup.jaccardPairsCrossStoredFromHashed]]). Therefore the full
+  * pair set of version v+1 decomposes exactly:
   *
   *   pairs(v+1) = pairs(v) \ {touching removed∪changed}
   *              ∪ pairs(delta × delta) ∪ pairs(delta × unchanged)
@@ -65,51 +65,25 @@ object IncrementalCuration {
       .select("doc_a", "doc_b")
 
   /** The incremental ledger transition: pairs(newCorpus) from
-    * pairs(prevCorpus) plus delta-bound pair generation only.
+    * pairs(prevCorpus) plus delta-bound pair generation only — the
+    * text-fed twin of [[transitionState]]: the same ledger step, with
+    * the unchanged side hashed from `prevCorpus`' text instead of read
+    * from a shingle store. Lazy: nothing is checkpointed, so the whole
+    * transition is one plan. The delta-sized right sides (the stale and
+    * affected ids and, inside [[TextDedup.jaccardPairsCrossStoredFromHashed]],
+    * the delta's distinct shingle hashes) are broadcast at plan time, under
+    * the delta-sized contract that kernel documents; a delta that
+    * rivals the corpus should run [[fullEdges]] instead.
     */
   def incrementEdges(prevCorpus: DataFrame, newCorpus: DataFrame,
                      prevEdges: DataFrame, textCol: String, idCol: String,
-                     n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    // Loud id-type contract (mirror of jaccardPairs' packed-key guard):
-    // the ledger's doc_a/doc_b are longs, so the affected/stale id
-    // frames are cast to long to join against it. A silent cast of a
-    // non-numeric id would yield NULLs, the semi/anti joins would match
-    // nothing, and the function would return the PREVIOUS ledger —
-    // a silent identity break. Refuse non-integral ids instead.
-    Seq(prevCorpus, newCorpus).foreach { c =>
-      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-      val dt = c.schema(idCol).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"incrementEdges: id column '$idCol' is $dt; the edge ledger " +
-          "keys on long ids (jaccardPairs packs them into 64-bit pair " +
-          "keys), and a lossy cast here would silently return a stale " +
-          "ledger. Map the id to an integral type first")
-    }
-    val diff = Diff.snapshotDiff(prevCorpus, newCorpus,
-      Seq(idCol), Seq(textCol))
-    val affected = diff.filter(col("status").isin("added", "changed"))
-      .select(col(idCol).cast("long").as(idCol))
-    val stale = diff.filter(col("status").isin("removed", "changed"))
-      .select(col(idCol).cast("long").as(idCol))
-    // pairs among unchanged docs are untouched — their texts are
-    // byte-identical, so full recompute would emit exactly these
-    val keptEdges = prevEdges
-      .join(stale.withColumnRenamed(idCol, "doc_a"), Seq("doc_a"), "left_anti")
-      .join(stale.withColumnRenamed(idCol, "doc_b"), Seq("doc_b"), "left_anti")
-      // USING joins front the key column — restore the ledger order
-      .select("doc_a", "doc_b")
-    val delta = newCorpus.join(affected, Seq(idCol), "left_semi")
-    val unchanged = newCorpus.join(affected, Seq(idCol), "left_anti")
-    val within = TextDedup.jaccardPairs(delta, textCol, idCol, n, threshold)
-      .select("doc_a", "doc_b")
-    // delta ids and unchanged ids are disjoint by construction; order
-    // each cross pair to the ledger's (min, max) convention
-    val cross = TextDedup.jaccardPairsCross(delta, unchanged,
-        textCol, idCol, n, threshold)
-      .select(least(col("new_id"), col("corpus_id")).as("doc_a"),
-        greatest(col("new_id"), col("corpus_id")).as("doc_b"))
-    keptEdges.unionByName(within).unionByName(cross)
-  }
+                     n: Int = 3, threshold: Double = 0.8): DataFrame =
+    ledgerStep(prevCorpus, newCorpus, prevEdges, 0, textCol, idCol, n,
+        threshold, identity) { stale =>
+      // unchanged docs: their texts are byte-identical in both versions
+      hashOnce(prevCorpus.join(broadcast(stale), Seq(idCol), "left_anti"),
+        textCol, idCol, n, identity)
+    }.edges
 
   /** Cluster assignment from a ledger: (idCol, cluster_id, is_canonical),
     * canonical = min id per transitive cluster — identical to
@@ -122,15 +96,15 @@ object IncrementalCuration {
   // ---- The persisted shingle store (r17 verdict item 2) ----
   //
   // [[incrementEdges]] re-streams the UNCHANGED side's shingles every
-  // release (jaccardPairsCross shingles prevCorpus∖stale from TEXT) —
-  // measured at sf10, a 2% release cost 60-75% of a full recompute
-  // (INC_CURATION.json r17: ~500-630 MB shuffle/release ≈ the 567 MB
-  // bootstrap). The state below persists the unchanged side's hashed
-  // shingle stream and set sizes ALONGSIDE the ledger, maintained
-  // incrementally by the same diff, so a release reads pre-hashed longs
-  // (columnar scan, no re-shingling) and the cross screen's shuffle is
-  // ∝ delta + matches (TextDedup.jaccardPairsCrossStored's broadcast
-  // semi-prune keeps the store side shuffle-free).
+  // release (it hashes prevCorpus∖stale from TEXT) — measured at sf10,
+  // a 2% release cost 60-75% of a full recompute (INC_CURATION.json
+  // r17: ~500-630 MB shuffle/release ≈ the 567 MB bootstrap). The state
+  // below persists the unchanged side's hashed shingle stream and set
+  // sizes ALONGSIDE the ledger, maintained incrementally by the same
+  // diff, so a release reads pre-hashed longs (columnar scan, no
+  // re-shingling) and the cross screen's shuffle is ∝ delta + matches
+  // (TextDedup.jaccardPairsCrossStoredFromHashed's broadcast semi-prune
+  // keeps the store side shuffle-free).
   //
   // Store layout is merge-on-read SEGMENTS + TOMBSTONES so maintaining
   // it is ALSO delta-bound (an in-place store rewrite would just move
@@ -192,22 +166,21 @@ object IncrementalCuration {
   def validSizes(st: LedgerState): DataFrame =
     validRows(st.sizes, st.tomb).select("doc", "sz")
 
-  /** ONE shingle+hash pass over `docs`' text, checkpointed, and the
-    * (doc, sz) set sizes counted over it: explode emits one row per
-    * distinct shingle string, so the count IS size(set). The bootstrap
-    * and every release share the result four ways — pair generation,
-    * the cross screen (releases), and both store segments — so the
-    * text is shingled exactly once per publish, in one stage (unshared,
-    * each consumer re-shingled the text in its own stage; a release's
-    * delta re-shingling was measured as its dominant delta-side term at
-    * sf10).
+  /** ONE shingle+hash pass over `docs`' text and the (doc, sz) set
+    * sizes counted over it ([[TextDedup.sizesFromHashed]]), each
+    * materialized by `ck` (a checkpoint by default). The bootstrap and
+    * every release share the result four ways — pair generation, the
+    * cross screen (releases), and both store segments — so the text is
+    * shingled exactly once per publish, in one stage (unshared, each
+    * consumer re-shingled the text in its own stage; a release's delta
+    * re-shingling was measured as its dominant delta-side term at
+    * sf10). [[incrementEdges]] passes `identity` to stay lazy.
     */
   private def hashOnce(docs: DataFrame, textCol: String, idCol: String,
-                       n: Int): (DataFrame, DataFrame) = {
-    val dh = TextDedup.hashedShingles(docs, textCol, idCol, n).localCheckpoint()
-    val dsz = dh.groupBy("doc").agg(count(lit(1)).cast("int").as("sz"))
-      .localCheckpoint()
-    (dh, dsz)
+                       n: Int, ck: DataFrame => DataFrame = _.localCheckpoint())
+      : (DataFrame, DataFrame) = {
+    val dh = ck(TextDedup.hashedShingles(docs, textCol, idCol, n))
+    (dh, ck(TextDedup.sizesFromHashed(dh)))
   }
 
   /** Version-0 state: full ledger + the bootstrap shingle segment, all
@@ -246,56 +219,83 @@ object IncrementalCuration {
     */
   def transitionState(prevCorpus: DataFrame, newCorpus: DataFrame,
                       st: LedgerState, textCol: String, idCol: String,
-                      n: Int = 3, threshold: Double = 0.8): Transition = {
-    // same loud id-type contract as incrementEdges
-    Seq(prevCorpus, newCorpus).foreach { c =>
-      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-      val dt = c.schema(idCol).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"transitionState: id column '$idCol' is $dt; the edge ledger " +
-          "keys on long ids (jaccardPairs packs them into 64-bit pair " +
-          "keys), and a lossy cast here would silently return a stale " +
-          "ledger. Map the id to an integral type first")
+                      n: Int = 3, threshold: Double = 0.8): Transition =
+    ledgerStep(prevCorpus, newCorpus, st.edges, st.rel + 1, textCol, idCol,
+        n, threshold, _.localCheckpoint()) { stale =>
+      val staleDocs = broadcast(stale.withColumnRenamed(idCol, "doc"))
+      (validShingles(st).join(staleDocs, Seq("doc"), "left_anti"),
+        validSizes(st).join(staleDocs, Seq("doc"), "left_anti"))
     }
-    val rel = st.rel + 1
-    // ONE diff pass, materialized as (id, status) — the affected/stale
-    // id frames and the publisher's stale count are all cheap filters
-    // over it (checkpointing the id frames separately re-ran the
-    // full-outer fingerprint join once per frame)
-    val diff = Diff.snapshotDiff(prevCorpus, newCorpus, Seq(idCol), Seq(textCol))
+
+  /** The ledger step both transitions share: diff the two snapshots,
+    * drop the stale ids' edges, and pair the delta within itself and
+    * against the unchanged corpus side, whose (doc, s) / (doc, sz)
+    * frames `unchanged` builds from the stale ids. `ck` materializes
+    * the diff and the delta's hash frames. The delta's text is
+    * shingled once, and that hash frame also becomes the store's new
+    * segments.
+    */
+  private def ledgerStep(prevCorpus: DataFrame, newCorpus: DataFrame,
+                         edges: DataFrame, rel: Int, textCol: String,
+                         idCol: String, n: Int, threshold: Double,
+                         ck: DataFrame => DataFrame)(
+      unchanged: DataFrame => (DataFrame, DataFrame)): Transition = {
+    requireIntegralIds(idCol, prevCorpus, newCorpus)
+    // ONE diff pass as (id, status) — the affected/stale id frames and
+    // the publisher's stale count are all cheap filters over it
+    // (checkpointing the id frames separately re-ran the full-outer
+    // fingerprint join once per frame)
+    val diff = ck(Diff.snapshotDiff(prevCorpus, newCorpus, Seq(idCol), Seq(textCol))
       .filter(col("status") =!= "unchanged")
-      .select(col(idCol).cast("long").as(idCol), col("status"))
-      .localCheckpoint()
+      .select(col(idCol).cast("long").as(idCol), col("status")))
     val affected = diff.filter(col("status").isin("added", "changed"))
       .select(idCol)
     val stale = diff.filter(col("status").isin("removed", "changed"))
       .select(idCol)
-    // delta-sized right sides get plan-time broadcast hints: the ledger
+    // pairs among unchanged docs are untouched — their texts are
+    // byte-identical, so full recompute would emit exactly these.
+    // Delta-sized right sides get plan-time broadcast hints: the ledger
     // and the shingle store must not shuffle for an anti-join against a
     // monthly drop's ids (same rationale as validRows' hint)
-    val keptEdges = st.edges
+    val keptEdges = edges
       .join(broadcast(stale.withColumnRenamed(idCol, "doc_a")), Seq("doc_a"), "left_anti")
       .join(broadcast(stale.withColumnRenamed(idCol, "doc_b")), Seq("doc_b"), "left_anti")
+      // USING joins front the key column — restore the ledger order
       .select("doc_a", "doc_b")
     val delta = newCorpus.join(broadcast(affected), Seq(idCol), "left_semi")
-    // ONE shingle+hash pass over the delta's text, shared by the
-    // within-delta pairs, the cross screen's new side, AND the store's
-    // new segments
-    val (dh, dsz) = hashOnce(delta, textCol, idCol, n)
+    val (dh, dsz) = hashOnce(delta, textCol, idCol, n, ck)
+    val (uh, usz) = unchanged(stale)
     val within = TextDedup.jaccardPairsFromHashed(dh, dsz, threshold)
       .select("doc_a", "doc_b")
-    val staleDocs = stale.withColumnRenamed(idCol, "doc")
-    val cross = TextDedup.jaccardPairsCrossStoredFromHashed(dh, dsz,
-        validShingles(st).join(broadcast(staleDocs), Seq("doc"), "left_anti"),
-        validSizes(st).join(broadcast(staleDocs), Seq("doc"), "left_anti"),
+    // delta ids and unchanged ids are disjoint by construction; order
+    // each cross pair to the ledger's (min, max) convention
+    val cross = TextDedup.jaccardPairsCrossStoredFromHashed(dh, dsz, uh, usz,
         threshold)
       .select(least(col("new_id"), col("corpus_id")).as("doc_a"),
         greatest(col("new_id"), col("corpus_id")).as("doc_b"))
     Transition(rel, keptEdges, within.unionByName(cross), delta, stale,
       dh.withColumn("rel", lit(rel)),
       dsz.withColumn("rel", lit(rel)),
-      staleDocs.withColumn("before_rel", lit(rel)))
+      stale.withColumnRenamed(idCol, "doc").withColumn("before_rel", lit(rel)))
   }
+
+  /** Loud id-type contract (mirror of jaccardPairs' packed-key guard):
+    * the ledger's doc_a/doc_b are longs, so the affected/stale id frames
+    * are cast to long to join against it. A silent cast of a
+    * non-numeric id would yield NULLs, the semi/anti joins would match
+    * nothing, and the transition would return the PREVIOUS ledger — a
+    * silent identity break. Refuse non-integral ids instead.
+    */
+  private def requireIntegralIds(idCol: String, corpora: DataFrame*): Unit =
+    corpora.foreach { c =>
+      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+      val dt = c.schema(idCol).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
+        s"IncrementalCuration: id column '$idCol' is $dt; the edge ledger " +
+          "keys on long ids (jaccardPairs packs them into 64-bit pair " +
+          "keys), and a lossy cast here would silently return a stale " +
+          "ledger. Map the id to an integral type first")
+    }
 
   /** Fold a transition into the frame-level state. `ck` is the
     * caller's per-release materialization (localCheckpoint in probes,

@@ -104,10 +104,15 @@ class IncrementalCurationSpec extends SparkSpec {
   }
 
   test("ledger identity is robust to an id-disjointness violation guard case") {
-    // jaccardPairsCross filters self-pairs defensively: feeding the same
+    // the cross kernel filters self-pairs defensively: feeding the same
     // frame on both sides yields only cross pairs among distinct ids
-    val x = graft.operators.TextDedup.jaccardPairsCross(v1, v1, "text", "doc_id")
+    import graft.operators.TextDedup
+    val h = TextDedup.hashedShingles(v1, "text", "doc_id")
+    val sz = TextDedup.sizesFromHashed(h)
+    val x = TextDedup.jaccardPairsCrossStoredFromHashed(h, sz, h, sz)
     assert(x.filter(col("new_id") === col("corpus_id")).count() === 0)
+    // and the distinct-id twins 1/2 still pair, both ways round
+    assert(x.filter(col("new_id") =!= col("corpus_id")).count() === 2)
   }
 
   test("shingle store: valid segments ≡ in-flight shingles at every version") {
@@ -134,15 +139,30 @@ class IncrementalCurationSpec extends SparkSpec {
       sortedRows(IncrementalCuration.fullEdges(v3, "text", "doc_id")))
   }
 
-  test("jaccardPairsCrossStored ≡ jaccardPairsCross on the same inputs") {
+  test("cross kernel matches jaccardPairs on delta-unchanged pairs") {
+    // the within-set kernel over the union is the oracle: its pairs with
+    // exactly one delta id are the delta×unchanged pairs, ordered
+    // (min, max) where the cross kernel orders (new, corpus)
     import graft.operators.TextDedup
-    val delta = v2.filter(col("doc_id").isin(7L, 8L))
-    val unchanged = v2.filter(!col("doc_id").isin(7L, 8L))
-    assert(sortedRows(TextDedup.jaccardPairsCrossStored(delta,
+    val deltaIds = Seq(3L, 7L, 8L)
+    val delta = v2.filter(col("doc_id").isin(deltaIds: _*))
+    val unchanged = v2.filter(!col("doc_id").isin(deltaIds: _*))
+    val dh = TextDedup.hashedShingles(delta, "text", "doc_id")
+    val cross = TextDedup.jaccardPairsCrossStoredFromHashed(dh,
+        TextDedup.sizesFromHashed(dh),
         TextDedup.hashedShingles(unchanged, "text", "doc_id"),
-        TextDedup.shingleSizes(unchanged, "text", "doc_id"),
-        "text", "doc_id")) ===
-      sortedRows(TextDedup.jaccardPairsCross(delta, unchanged, "text", "doc_id")))
+        TextDedup.shingleSizes(unchanged, "text", "doc_id"))
+      .select(least(col("new_id"), col("corpus_id")).as("doc_a"),
+        greatest(col("new_id"), col("corpus_id")).as("doc_b"), col("jaccard"))
+    val inDelta = (c: String) => col(c).isin(deltaIds: _*)
+    val oracle = TextDedup.jaccardPairs(delta.unionByName(unchanged), "text", "doc_id")
+      .filter(inDelta("doc_a") =!= inDelta("doc_b"))
+    val got = sortedRows(cross)
+    assert(got === sortedRows(oracle))
+    // the fixture has cross pairs to compare: 7 twins 1 and 2, revised 3
+    // near-dups 5
+    assert(got.map(r => (r.getLong(0), r.getLong(1))) ===
+      Seq((1L, 7L), (2L, 7L), (3L, 5L)))
   }
 
   test("pure-add release publishes corpus and ledger as deltas, not rewrites") {

@@ -332,11 +332,68 @@ class PlanAuditSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, sf)
       .select(col("doc_id").cast("string").as("doc_id"), col("text"))
     val edges = docs.sparkSession.emptyDataFrame
-    val e = intercept[IllegalArgumentException] {
-      IncrementalCuration.incrementEdges(docs, docs, edges, "text", "doc_id")
+    val st = IncrementalCuration.LedgerState(0, edges, edges, edges, edges)
+    for ((label, call) <- Seq[(String, () => Any)](
+      "incrementEdges" -> (() =>
+        IncrementalCuration.incrementEdges(docs, docs, edges, "text", "doc_id")),
+      "transitionState" -> (() =>
+        IncrementalCuration.transitionState(docs, docs, st, "text", "doc_id")))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("integral") || e.getMessage.contains("stale"),
+        s"$label: unexpected refusal message: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("integral") || e.getMessage.contains("stale"),
-      s"unexpected refusal message: ${e.getMessage}")
+  }
+
+  test("exact-pair paths shingle once: no Filter evaluates word_ngrams") {
+    // a filter on a column computed from the shingle array (size(set) >
+    // 0, isnotnull(sig), ...) is pushed below the projection that
+    // computes it, so the filter shingles the text once more. The exact
+    // paths count sizes over the hashed stream and the md5 banding
+    // filters the generator's output, so no Filter may mention the
+    // kernel. A relation read from the cache (the portable banding
+    // persists its frame) is searched through its cached physical plan.
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import graft.operators.TextDedup
+    import graft.pipelines.IncrementalCuration
+    // (in a Filter's condition?, expression) for every plan node
+    def exprs(p: LogicalPlan): Seq[(Boolean, Expression)] = p.flatMap {
+      case r: InMemoryRelation => r.cacheBuilder.cachedPlan.flatMap {
+        case f: FilterExec => Seq(true -> f.condition)
+        case n => n.expressions.map(false -> _)
+      }
+      case f: Filter => Seq(true -> f.condition)
+      case n => n.expressions.map(false -> _)
+    }
+    def kernels(e: Expression) =
+      e.collect { case w: graft.plans.WordNGrams => w }.size
+    val docs = graft.Tables.documents(spark, sf)
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    val prev = docs.filter(col("doc_id") % 7 =!= 0)
+    val jaccard = TextDedup.jaccardPairs(docs, "text", "doc_id")
+    val frames = Seq(
+      "jaccardPairs" -> jaccard,
+      "containmentPairs" -> TextDedup.containmentPairs(docs, "text", "doc_id"),
+      "shingleSizes" -> TextDedup.shingleSizes(docs, "text", "doc_id"),
+      "incrementEdges" -> IncrementalCuration.incrementEdges(prev, docs,
+        IncrementalCuration.fullEdges(prev, "text", "doc_id"), "text", "doc_id"),
+      "minhashLshPairsPortable" ->
+        TextDedup.minhashLshPairsPortable(docs, "text", "doc_id"))
+    for ((label, df) <- frames) {
+      val all = exprs(df.queryExecution.optimizedPlan)
+      assert(all.exists(e => kernels(e._2) > 0),
+        s"$label: the optimized plan shingles nothing")
+      val offenders = all.collect { case (true, c) if kernels(c) > 0 => c.sql }
+      assert(offenders.isEmpty,
+        s"$label: Filters evaluate word_ngrams:\n${offenders.mkString("\n")}")
+    }
+    // one kernel for the posting stream, one per side of the sizes
+    // join (AQE reuses the second sizes exchange)
+    val inJaccard = exprs(jaccard.queryExecution.optimizedPlan)
+      .map(e => kernels(e._2)).sum
+    assert(inJaccard <= 3, s"jaccardPairs' optimized plan shingles $inJaccard times")
   }
 
   test("snapshotDiff: the full-outer join inputs carry (key, fingerprint) only") {
