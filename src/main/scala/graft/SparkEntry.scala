@@ -973,39 +973,7 @@ object SparkEntry {
       // diff+screen+curate composition). IncrementalCurationSpec proves
       // the same identity per intermediate version with the Versioned
       // publish wrapper.
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      // each version frame is consumed by several stages (its own pair
-      // gen, both sides of a diff, the next version's construction) —
-      // checkpoint them like the at-rest parquet snapshots they stand in
-      // for (Versioned.write/read in the pipeline form), so the
-      // compounding union+case lineage isn't re-derived per consumer
-      // bounded fan on the version checkpoints: the single-split scan
-      // would otherwise serialize every shingle pass over v1/v2/v3,
-      // while a full 32-way fan accumulates partitions through the
-      // unions (32->64->96) and drowns this ~50-stage pipeline in task
-      // launches (measured both ways; defaultParallelism/4 is the
-      // interleaved-A/B sweet spot — versions re-materialize at a
-      // FIXED width, so nothing accumulates)
-      // (r19: collapsing the 3 version checkpoints into ONE tagged
-      // union job was A/B'd 3× interleaved and measured a wash —
-      // q_inc_curate −0.4 s once, store twin +0.2/+0.9 — reverted;
-      // every consumer would read 3× the checkpointed blocks)
-      val fan = math.max(1, s.sparkContext.defaultParallelism / 4)
-      val v1 = docs.filter(col("doc_id") % 3 =!= 2)
-        .repartition(fan).localCheckpoint()
-      val v2 = v1.filter(col("doc_id") % 11 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 13 === 0, concat(col("text"), lit(" r2")))
-            .otherwise(col("text")).as("text"))
-        .unionByName(docs.filter(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 0))
-        .repartition(fan).localCheckpoint()
-      val v3 = v2.filter(col("doc_id") % 19 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 7 === 0, concat(col("text"), lit(" r3")))
-            .otherwise(col("text")).as("text"))
-        .unionByName(docs.filter(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 1))
-        .repartition(fan).localCheckpoint()
+      val (v1, v2, v3) = curationVersions(s, d)
       // each ledger version is edge-sized and feeds the next transition
       // (in production it is the persisted parquet the pipeline reads
       // back) — localCheckpoint stands in for that persistence and cuts
@@ -1027,41 +995,16 @@ object SparkEntry {
       // against the SAME full-recompute DuckDB oracle. Per-release
       // state checkpoints stand in for the at-rest segment parquet
       // exactly like q_inc_curate's ledger checkpoints.
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      // bounded fan on the version checkpoints: the single-split scan
-      // would otherwise serialize every shingle pass over v1/v2/v3,
-      // while a full 32-way fan accumulates partitions through the
-      // unions (32->64->96) and drowns this ~50-stage pipeline in task
-      // launches (measured both ways; defaultParallelism/4 is the
-      // interleaved-A/B sweet spot — versions re-materialize at a
-      // FIXED width, so nothing accumulates)
-      val fan = math.max(1, s.sparkContext.defaultParallelism / 4)
-      val v1 = docs.filter(col("doc_id") % 3 =!= 2)
-        .repartition(fan).localCheckpoint()
-      val v2 = v1.filter(col("doc_id") % 11 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 13 === 0, concat(col("text"), lit(" r2")))
-            .otherwise(col("text")).as("text"))
-        .unionByName(docs.filter(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 0))
-        .repartition(fan).localCheckpoint()
-      val v3 = v2.filter(col("doc_id") % 19 =!= 0)
-        .select(col("doc_id"),
-          when(col("doc_id") % 7 === 0, concat(col("text"), lit(" r3")))
-            .otherwise(col("text")).as("text"))
-        .unionByName(docs.filter(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 1))
-        .repartition(fan).localCheckpoint()
+      val (v1, v2, v3) = curationVersions(s, d)
       val st1 = {
         // the shingle and size segments are already checkpointed
         val b = IncrementalCuration.bootstrapState(v1, "text", "doc_id")
         b.copy(edges = b.edges.localCheckpoint())
       }
       val st2 = IncrementalCuration.applyTransition(st1,
-        IncrementalCuration.transitionState(v1, v2, st1, "text", "doc_id"),
-        _.localCheckpoint())
+        IncrementalCuration.transitionState(v1, v2, st1, "text", "doc_id"))
       val st3 = IncrementalCuration.applyTransition(st2,
-        IncrementalCuration.transitionState(v2, v3, st2, "text", "doc_id"),
-        _.localCheckpoint())
+        IncrementalCuration.transitionState(v2, v3, st2, "text", "doc_id"))
       IncrementalCuration.curatedFromEdges(v3, "doc_id", st3.edges)
         .orderBy("doc_id")
     }),
@@ -2542,6 +2485,50 @@ object SparkEntry {
   private[graft] lazy val trainedDemoWeights: Array[Long] = {
     val rnd = new scala.util.Random(7L)
     Array.fill(64)((rnd.nextInt(2000001) - 1000000).toLong)
+  }
+
+  /** The three corpus versions q_inc_curate and q_inc_curate_store
+    * curate: v1 holds back the ids ≡ 2 mod 3; v2 drops the ids ≡ 0 mod
+    * 11, revises the ids ≡ 0 mod 13 and adds the even held-back ids; v3
+    * drops the ids ≡ 0 mod 19, revises the ids ≡ 0 mod 7 and adds the
+    * odd ones. Each version frame is consumed by several stages (its
+    * own pair gen, both sides of a diff, the next version's
+    * construction), so each is checkpointed like the at-rest parquet
+    * snapshot it stands in for (Versioned.write/read in the pipeline
+    * form), and the compounding union+case lineage isn't re-derived per
+    * consumer.
+    */
+  private def curationVersions(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val docs = Tables.documents(s, d)
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+    // bounded fan on the version checkpoints: the single-split scan
+    // would otherwise serialize every shingle pass over v1/v2/v3,
+    // while a full 32-way fan accumulates partitions through the
+    // unions (32->64->96) and drowns this ~50-stage pipeline in task
+    // launches (measured both ways; defaultParallelism/4 is the
+    // interleaved-A/B sweet spot — versions re-materialize at a
+    // FIXED width, so nothing accumulates)
+    // (r19: collapsing the 3 version checkpoints into ONE tagged
+    // union job was A/B'd 3× interleaved and measured a wash —
+    // q_inc_curate −0.4 s once, store twin +0.2/+0.9 — reverted;
+    // every consumer would read 3× the checkpointed blocks)
+    val fan = math.max(1, s.sparkContext.defaultParallelism / 4)
+    val v1 = docs.filter(col("doc_id") % 3 =!= 2)
+      .repartition(fan).localCheckpoint()
+    val v2 = v1.filter(col("doc_id") % 11 =!= 0)
+      .select(col("doc_id"),
+        when(col("doc_id") % 13 === 0, concat(col("text"), lit(" r2")))
+          .otherwise(col("text")).as("text"))
+      .unionByName(docs.filter(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 0))
+      .repartition(fan).localCheckpoint()
+    val v3 = v2.filter(col("doc_id") % 19 =!= 0)
+      .select(col("doc_id"),
+        when(col("doc_id") % 7 === 0, concat(col("text"), lit(" r3")))
+          .otherwise(col("text")).as("text"))
+      .unionByName(docs.filter(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 1))
+      .repartition(fan).localCheckpoint()
+    (v1, v2, v3)
   }
 
   /** Deterministic synthetic URL for a document id — the corpus tables

@@ -68,21 +68,24 @@ object IncrementalCuration {
     * pairs(prevCorpus) plus delta-bound pair generation only — the
     * text-fed twin of [[transitionState]]: the same ledger step, with
     * the unchanged side hashed from `prevCorpus`' text instead of read
-    * from a shingle store. Lazy: nothing is checkpointed, so the whole
-    * transition is one plan. The delta-sized right sides (the stale and
-    * affected ids and, inside [[TextDedup.jaccardPairsCrossStoredFromHashed]],
-    * the delta's distinct shingle hashes) are broadcast at plan time, under
-    * the delta-sized contract that kernel documents; a delta that
-    * rivals the corpus should run [[fullEdges]] instead.
+    * from a shingle store. The diff and the delta's hash frames are
+    * checkpointed (delta-sized, as in [[transitionState]]); the
+    * corpus-sized unchanged side stays lazy. The delta-sized right sides
+    * (the stale and affected ids and, inside
+    * [[TextDedup.jaccardPairsCrossStoredFromHashed]], the delta's
+    * distinct shingle hashes) are broadcast at plan time, under the
+    * delta-sized contract that kernel documents; a delta that rivals the
+    * corpus should run [[fullEdges]] instead.
     */
   def incrementEdges(prevCorpus: DataFrame, newCorpus: DataFrame,
                      prevEdges: DataFrame, textCol: String, idCol: String,
                      n: Int = 3, threshold: Double = 0.8): DataFrame =
     ledgerStep(prevCorpus, newCorpus, prevEdges, 0, textCol, idCol, n,
-        threshold, identity) { stale =>
+        threshold) { stale =>
       // unchanged docs: their texts are byte-identical in both versions
-      hashOnce(prevCorpus.join(broadcast(stale), Seq(idCol), "left_anti"),
-        textCol, idCol, n, identity)
+      val uh = TextDedup.hashedShingles(
+        prevCorpus.join(broadcast(stale), Seq(idCol), "left_anti"), textCol, idCol, n)
+      (uh, TextDedup.sizesFromHashed(uh))
     }.edges
 
   /** Cluster assignment from a ledger: (idCol, cluster_id, is_canonical),
@@ -168,19 +171,17 @@ object IncrementalCuration {
 
   /** ONE shingle+hash pass over `docs`' text and the (doc, sz) set
     * sizes counted over it ([[TextDedup.sizesFromHashed]]), each
-    * materialized by `ck` (a checkpoint by default). The bootstrap and
-    * every release share the result four ways — pair generation, the
-    * cross screen (releases), and both store segments — so the text is
-    * shingled exactly once per publish, in one stage (unshared, each
-    * consumer re-shingled the text in its own stage; a release's delta
-    * re-shingling was measured as its dominant delta-side term at
-    * sf10). [[incrementEdges]] passes `identity` to stay lazy.
+    * checkpointed. The bootstrap and every release share the result
+    * four ways — pair generation, the cross screen (releases), and both
+    * store segments — so the text is shingled exactly once per publish,
+    * in one stage (unshared, each consumer re-shingled the text in its
+    * own stage; a release's delta re-shingling was measured as its
+    * dominant delta-side term at sf10).
     */
   private def hashOnce(docs: DataFrame, textCol: String, idCol: String,
-                       n: Int, ck: DataFrame => DataFrame = _.localCheckpoint())
-      : (DataFrame, DataFrame) = {
-    val dh = ck(TextDedup.hashedShingles(docs, textCol, idCol, n))
-    (dh, ck(TextDedup.sizesFromHashed(dh)))
+                       n: Int): (DataFrame, DataFrame) = {
+    val dh = TextDedup.hashedShingles(docs, textCol, idCol, n).localCheckpoint()
+    (dh, TextDedup.sizesFromHashed(dh).localCheckpoint())
   }
 
   /** Version-0 state: full ledger + the bootstrap shingle segment, all
@@ -221,7 +222,7 @@ object IncrementalCuration {
                       st: LedgerState, textCol: String, idCol: String,
                       n: Int = 3, threshold: Double = 0.8): Transition =
     ledgerStep(prevCorpus, newCorpus, st.edges, st.rel + 1, textCol, idCol,
-        n, threshold, _.localCheckpoint()) { stale =>
+        n, threshold) { stale =>
       val staleDocs = broadcast(stale.withColumnRenamed(idCol, "doc"))
       (validShingles(st).join(staleDocs, Seq("doc"), "left_anti"),
         validSizes(st).join(staleDocs, Seq("doc"), "left_anti"))
@@ -230,24 +231,23 @@ object IncrementalCuration {
   /** The ledger step both transitions share: diff the two snapshots,
     * drop the stale ids' edges, and pair the delta within itself and
     * against the unchanged corpus side, whose (doc, s) / (doc, sz)
-    * frames `unchanged` builds from the stale ids. `ck` materializes
-    * the diff and the delta's hash frames. The delta's text is
-    * shingled once, and that hash frame also becomes the store's new
-    * segments.
+    * frames `unchanged` builds from the stale ids. The diff and the
+    * delta's hash frames are checkpointed. The delta's text is shingled
+    * once, and that hash frame also becomes the store's new segments.
     */
   private def ledgerStep(prevCorpus: DataFrame, newCorpus: DataFrame,
                          edges: DataFrame, rel: Int, textCol: String,
-                         idCol: String, n: Int, threshold: Double,
-                         ck: DataFrame => DataFrame)(
+                         idCol: String, n: Int, threshold: Double)(
       unchanged: DataFrame => (DataFrame, DataFrame)): Transition = {
     requireIntegralIds(idCol, prevCorpus, newCorpus)
     // ONE diff pass as (id, status) — the affected/stale id frames and
     // the publisher's stale count are all cheap filters over it
     // (checkpointing the id frames separately re-ran the full-outer
     // fingerprint join once per frame)
-    val diff = ck(Diff.snapshotDiff(prevCorpus, newCorpus, Seq(idCol), Seq(textCol))
+    val diff = Diff.snapshotDiff(prevCorpus, newCorpus, Seq(idCol), Seq(textCol))
       .filter(col("status") =!= "unchanged")
-      .select(col(idCol).cast("long").as(idCol), col("status")))
+      .select(col(idCol).cast("long").as(idCol), col("status"))
+      .localCheckpoint()
     val affected = diff.filter(col("status").isin("added", "changed"))
       .select(idCol)
     val stale = diff.filter(col("status").isin("removed", "changed"))
@@ -263,20 +263,27 @@ object IncrementalCuration {
       // USING joins front the key column — restore the ledger order
       .select("doc_a", "doc_b")
     val delta = newCorpus.join(broadcast(affected), Seq(idCol), "left_semi")
-    val (dh, dsz) = hashOnce(delta, textCol, idCol, n, ck)
+    val (dh, dsz) = hashOnce(delta, textCol, idCol, n)
     val (uh, usz) = unchanged(stale)
+    Transition(rel, keptEdges, pairStep(dh, dsz, uh, usz, threshold), delta,
+      stale, dh.withColumn("rel", lit(rel)), dsz.withColumn("rel", lit(rel)),
+      stale.withColumnRenamed(idCol, "doc").withColumn("before_rel", lit(rel)))
+  }
+
+  /** A release's new ledger rows: the delta's (doc, s) / (doc, sz)
+    * frames paired within themselves and against the unchanged side's.
+    * Delta ids and unchanged ids are disjoint by construction; each
+    * cross pair is ordered to the ledger's (least, greatest) convention.
+    */
+  private def pairStep(dh: DataFrame, dsz: DataFrame, uh: DataFrame,
+                       usz: DataFrame, threshold: Double): DataFrame = {
     val within = TextDedup.jaccardPairsFromHashed(dh, dsz, threshold)
       .select("doc_a", "doc_b")
-    // delta ids and unchanged ids are disjoint by construction; order
-    // each cross pair to the ledger's (min, max) convention
     val cross = TextDedup.jaccardPairsCrossStoredFromHashed(dh, dsz, uh, usz,
         threshold)
       .select(least(col("new_id"), col("corpus_id")).as("doc_a"),
         greatest(col("new_id"), col("corpus_id")).as("doc_b"))
-    Transition(rel, keptEdges, within.unionByName(cross), delta, stale,
-      dh.withColumn("rel", lit(rel)),
-      dsz.withColumn("rel", lit(rel)),
-      stale.withColumnRenamed(idCol, "doc").withColumn("before_rel", lit(rel)))
+    within.unionByName(cross)
   }
 
   /** Loud id-type contract (mirror of jaccardPairs' packed-key guard):
@@ -297,24 +304,24 @@ object IncrementalCuration {
           "ledger. Map the id to an integral type first")
     }
 
-  /** Fold a transition into the frame-level state. `ck` is the
-    * caller's per-release materialization (localCheckpoint in probes,
-    * identity if frames are persisted elsewhere) applied to the DELTA
-    * pieces only — the carried segments stay whatever the previous
-    * fold made them, mirroring the at-rest segment files.
+  /** Fold a transition into the frame-level state. The new ledger and
+    * the DELTA pieces are localCheckpoint'ed, standing in for the
+    * persisted parquet a publish writes; the carried segments stay
+    * whatever the previous fold made them, mirroring the at-rest
+    * segment files.
     */
-  def applyTransition(st: LedgerState, t: Transition,
-                      ck: DataFrame => DataFrame = identity): LedgerState =
+  def applyTransition(st: LedgerState, t: Transition): LedgerState =
     LedgerState(t.rel,
-      ck(t.keptEdges.unionByName(t.newEdges)),
-      st.shingles.unionByName(ck(t.shingleDelta)),
-      st.sizes.unionByName(ck(t.sizeDelta)),
-      st.tomb.unionByName(ck(t.tombDelta)))
+      t.keptEdges.unionByName(t.newEdges).localCheckpoint(),
+      st.shingles.unionByName(t.shingleDelta.localCheckpoint()),
+      st.sizes.unionByName(t.sizeDelta.localCheckpoint()),
+      st.tomb.unionByName(t.tombDelta.localCheckpoint()))
 
   // ---- Versioned persistence (corpus snapshots, ledgers, outputs) ----
   //
   // Six version stores move in LOCKSTEP, written in one fixed order per
-  // publish (corpus → edges → sh → sz → tomb → curated). A crash
+  // publish (corpus → edges → sh → sz → tomb → curated) by one writer,
+  // `release`, whether the release is a publish or a heal. A crash
   // between writes leaves a strict PREFIX at the new seq; [[heal]]
   // recomputes and writes the missing suffix deterministically (the
   // ledger math is per-pair deterministic), so a restarted cadence
@@ -343,12 +350,7 @@ object IncrementalCuration {
 
   /** The persisted [[LedgerState]] at the live version. */
   def readState(spark: SparkSession, root: String): LedgerState =
-    LedgerState(
-      Sinks.Versioned.versions(spark, edgesRoot(root)).last,
-      Sinks.Versioned.read(spark, edgesRoot(root)),
-      Sinks.Versioned.read(spark, shRoot(root)),
-      Sinks.Versioned.read(spark, szRoot(root)),
-      Sinks.Versioned.read(spark, tombRoot(root)))
+    stateAt(spark, root, Sinks.Versioned.versions(spark, edgesRoot(root)).last)
 
   private def stateAt(spark: SparkSession, root: String, seq: Int): LedgerState =
     LedgerState(seq,
@@ -357,24 +359,78 @@ object IncrementalCuration {
       Sinks.Versioned.readAt(spark, szRoot(root), seq),
       Sinks.Versioned.readAt(spark, tombRoot(root), seq))
 
+  private def lastSeq(spark: SparkSession, root: String): Option[Int] =
+    Sinks.Versioned.versions(spark, root).lastOption
+
+  /** The one writer of a release: the six stores in write order, each
+    * written unless it already holds `target` (every store on a publish,
+    * the torn suffix on a [[heal]]), then all six checked in step at
+    * `target`. `corpus` and `edges` are the caller's write (full or
+    * delta) into the given root; the shingle, size and tomb segments
+    * land as deltas, and the curated assignment as a full write built
+    * once the stores before it have landed. Returns the number of
+    * stores written.
+    */
+  private def release(root: String, target: Int,
+                      corpus: String => Int, edges: String => Int,
+                      sh: DataFrame, sz: DataFrame, tomb: DataFrame)(
+      curated: => DataFrame): Int = {
+    val spark = sh.sparkSession
+    // one write per store, in allRoots' order
+    val puts: Seq[String => Int] = Seq(corpus, edges,
+      Sinks.Versioned.writeDelta(sh, _), Sinks.Versioned.writeDelta(sz, _),
+      Sinks.Versioned.writeDelta(tomb, _), Sinks.Versioned.write(curated, _))
+    val behind = allRoots(root).zip(puts)
+      .filter { case (r, _) => lastSeq(spark, r).forall(_ < target) }
+    behind.foreach { case (r, put) => put(r): Unit }
+    val seqs = allRoots(root).map(lastSeq(spark, _))
+    require(seqs.forall(_.contains(target)), s"version stores out of step: $seqs")
+    behind.size
+  }
+
+  /** Release `target` from a full corpus: the bootstrap state, its
+    * ledger checkpointed for the ledger write and the curation pass.
+    */
+  private def releaseBootstrap(docs: DataFrame, root: String, target: Int,
+                               textCol: String, idCol: String, n: Int,
+                               threshold: Double): Int = {
+    val st = bootstrapState(docs, textCol, idCol, n, threshold)
+    val edges = st.edges.localCheckpoint()
+    release(root, target, Sinks.Versioned.write(docs, _),
+      Sinks.Versioned.writeDelta(edges, _), st.shingles, st.sizes, st.tomb)(
+      curatedFromEdges(docs, idCol, edges))
+  }
+
+  /** Release `t.rel` from a transition. A pure-add release (nothing
+    * removed or changed) publishes corpus and ledger as deltas; any
+    * other rewrites both. `newCorpus` is evaluated only where it is
+    * written or curated, so a caller may read it back from the corpus
+    * store this release has just written.
+    */
+  private def releaseTransition(newCorpus: => DataFrame, t: Transition,
+                                pureAdd: Boolean, root: String,
+                                idCol: String): Int = {
+    // the new ledger rows feed the ledger write AND the curation pass
+    val newEdges = t.newEdges.localCheckpoint()
+    val edgesAll = t.keptEdges.unionByName(newEdges)
+    release(root, t.rel,
+      if (pureAdd) Sinks.Versioned.writeDelta(t.delta, _)
+      else Sinks.Versioned.write(newCorpus, _),
+      if (pureAdd) Sinks.Versioned.writeDelta(newEdges, _)
+      else Sinks.Versioned.write(edgesAll, _),
+      t.shingleDelta, t.sizeDelta, t.tombDelta)(
+      curatedFromEdges(newCorpus, idCol, edgesAll))
+  }
+
   /** Publish version 0: full recompute of the ledger and the curated
     * assignment; persists corpus snapshot + ledger + shingle store +
     * curation under `root`. Returns the published seq (0).
     */
   def bootstrap(docs: DataFrame, root: String, textCol: String, idCol: String,
                 n: Int = 3, threshold: Double = 0.8): Int = {
-    val st = bootstrapState(docs, textCol, idCol, n, threshold)
-    val edges = st.edges.localCheckpoint() // ledger write AND curation
-    val vCorpus = Sinks.Versioned.write(docs, corpusRoot(root))
-    val vEdges = Sinks.Versioned.writeDelta(edges, edgesRoot(root))
-    val vSh = Sinks.Versioned.writeDelta(st.shingles, shRoot(root))
-    val vSz = Sinks.Versioned.writeDelta(st.sizes, szRoot(root))
-    val vTomb = Sinks.Versioned.writeDelta(st.tomb, tombRoot(root))
-    val vCur = Sinks.Versioned.write(
-      curatedFromEdges(docs, idCol, edges), curatedRoot(root))
-    val seqs = Seq(vCorpus, vEdges, vSh, vSz, vTomb, vCur)
-    require(seqs.forall(_ == vCorpus), s"version stores out of step: $seqs")
-    vCorpus
+    val seq = lastSeq(docs.sparkSession, corpusRoot(root)).fold(0)(_ + 1)
+    releaseBootstrap(docs, root, seq, textCol, idCol, n, threshold): Unit
+    seq
   }
 
   /** Publish version v+1 from a new corpus snapshot: only added/changed
@@ -389,32 +445,17 @@ object IncrementalCuration {
     val spark = newCorpus.sparkSession
     heal(spark, root, textCol, idCol, n, threshold): Unit
     val prevCorpus = Sinks.Versioned.read(spark, corpusRoot(root))
-    val t = transitionState(prevCorpus, newCorpus,
-      readState(spark, root), textCol, idCol, n, threshold)
+    val st = readState(spark, root)
+    val t = transitionState(prevCorpus, newCorpus, st, textCol, idCol, n,
+      threshold)
     val nStale = t.staleIds.count()
     // idempotent re-publish: a restart that retries a publish whose
     // corpus already landed (heal above completed any torn suffix)
     // finds an empty diff — return the live seq instead of stamping a
     // contentless duplicate version
-    if (nStale == 0 && t.delta.isEmpty)
-      return Sinks.Versioned.versions(spark, corpusRoot(root)).last
-    // the new ledger rows feed the ledger write AND the curation pass
-    val newEdges = t.newEdges.localCheckpoint()
-    val edgesAll = t.keptEdges.unionByName(newEdges)
-    val vCorpus =
-      if (nStale == 0) Sinks.Versioned.writeDelta(t.delta, corpusRoot(root))
-      else Sinks.Versioned.write(newCorpus, corpusRoot(root))
-    val vEdges =
-      if (nStale == 0) Sinks.Versioned.writeDelta(newEdges, edgesRoot(root))
-      else Sinks.Versioned.write(edgesAll, edgesRoot(root))
-    val vSh = Sinks.Versioned.writeDelta(t.shingleDelta, shRoot(root))
-    val vSz = Sinks.Versioned.writeDelta(t.sizeDelta, szRoot(root))
-    val vTomb = Sinks.Versioned.writeDelta(t.tombDelta, tombRoot(root))
-    val vCur = Sinks.Versioned.write(
-      curatedFromEdges(newCorpus, idCol, edgesAll), curatedRoot(root))
-    val seqs = Seq(vCorpus, vEdges, vSh, vSz, vTomb, vCur)
-    require(seqs.forall(_ == vCorpus), s"version stores out of step: $seqs")
-    vCorpus
+    if (nStale == 0 && t.delta.isEmpty) return st.rel
+    releaseTransition(newCorpus, t, nStale == 0, root, idCol): Unit
+    t.rel
   }
 
   /** Publish version v+1 from a KNOWN pure-add drop — the streaming-
@@ -442,110 +483,62 @@ object IncrementalCuration {
     val rel = st.rel + 1
     val dIds = delta.select(col(idCol).cast("long").as(idCol)).localCheckpoint()
     val nDelta = dIds.count()
-    if (nDelta == 0)
-      return Sinks.Versioned.versions(spark, corpusRoot(root)).last
+    if (nDelta == 0) return st.rel
     // pure-add check rides the corpus ID COLUMN only (pruned columnar
     // scan, broadcast delta ids — no shuffle, no text)
     val present = Sinks.Versioned.read(spark, corpusRoot(root))
       .select(col(idCol).cast("long").as(idCol))
       .join(broadcast(dIds), Seq(idCol), "left_semi").count()
-    if (present == nDelta)
-      return Sinks.Versioned.versions(spark, corpusRoot(root)).last
+    if (present == nDelta) return st.rel
     require(present == 0,
       s"publishDrop: $present of $nDelta drop ids already live — not a " +
         "pure-add drop (changed/removed docs need publishIncrement's diff)")
-    // one shingle+hash pass over the drop, shared four ways (within
-    // pairs, cross screen, both store segments)
+    // a pure-add transition without the diff: one shingle+hash pass over
+    // the drop, shared four ways (within pairs, cross screen, both store
+    // segments); nothing is stale
     val (dh, dsz) = hashOnce(delta, textCol, idCol, n)
-    val within = TextDedup.jaccardPairsFromHashed(dh, dsz, threshold)
-      .select("doc_a", "doc_b")
-    val cross = TextDedup.jaccardPairsCrossStoredFromHashed(dh, dsz,
-        validShingles(st), validSizes(st), threshold)
-      .select(least(col("new_id"), col("corpus_id")).as("doc_a"),
-        greatest(col("new_id"), col("corpus_id")).as("doc_b"))
-    val newEdges = within.unionByName(cross).localCheckpoint()
-    val emptyTombDelta = st.tomb.limit(0)
-    val vCorpus = Sinks.Versioned.writeDelta(delta, corpusRoot(root))
-    val vEdges = Sinks.Versioned.writeDelta(newEdges, edgesRoot(root))
-    val vSh = Sinks.Versioned.writeDelta(
-      dh.withColumn("rel", lit(rel)), shRoot(root))
-    val vSz = Sinks.Versioned.writeDelta(
-      dsz.withColumn("rel", lit(rel)), szRoot(root))
-    val vTomb = Sinks.Versioned.writeDelta(emptyTombDelta, tombRoot(root))
-    val newCorpus = Sinks.Versioned.read(spark, corpusRoot(root))
-    val vCur = Sinks.Versioned.write(
-      curatedFromEdges(newCorpus, idCol, st.edges.unionByName(newEdges)),
-      curatedRoot(root))
-    val seqs = Seq(vCorpus, vEdges, vSh, vSz, vTomb, vCur)
-    require(seqs.forall(_ == vCorpus), s"version stores out of step: $seqs")
-    vCorpus
+    val t = Transition(rel, st.edges,
+      pairStep(dh, dsz, validShingles(st), validSizes(st), threshold),
+      delta, dIds.limit(0), dh.withColumn("rel", lit(rel)),
+      dsz.withColumn("rel", lit(rel)), st.tomb.limit(0))
+    // curation reads the corpus back once the drop has landed in it
+    releaseTransition(Sinks.Versioned.read(spark, corpusRoot(root)), t,
+      pureAdd = true, root, idCol): Unit
+    rel
   }
 
   /** Roll a torn publish FORWARD: the six stores are written in a fixed
-    * order, so a crash leaves the later stores exactly one seq behind
-    * the corpus. Recompute the missing pieces from corpus versions S-1
-    * and S (deterministic — same functions, same inputs as the crashed
-    * publish) and write them; a state that is neither in-step nor a
-    * one-behind prefix refuses loudly. Requires version S-1 retained
-    * (vacuum keep >= 2, the standing reader-grace contract). Returns
-    * the number of stores healed (0 = nothing to do).
+    * order, so a crash leaves a prefix of them at the corpus's seq S and
+    * the rest exactly one version behind (absent, when a bootstrap tore
+    * at S = 0). Rerun the release that tore from corpus versions S-1 and
+    * S (deterministic — same functions, same inputs as the crashed
+    * publish), writing only the stores behind S; any other shape refuses
+    * loudly. Requires version S-1 retained (vacuum keep >= 2, the
+    * standing reader-grace contract). Returns the number of stores
+    * healed (0 = nothing to do).
     */
   def heal(spark: SparkSession, root: String, textCol: String, idCol: String,
            n: Int = 3, threshold: Double = 0.8): Int = {
-    val seqs = allRoots(root)
-      .map(r => Sinks.Versioned.versions(spark, r).lastOption)
+    val seqs = allRoots(root).map(lastSeq(spark, _))
     val target = seqs.head.getOrElse(
       throw new java.io.FileNotFoundException(
         s"heal: no published corpus under $root — bootstrap first"))
-    val behind = seqs.zip(allRoots(root)).filter(_._1.forall(_ < target))
-    if (behind.isEmpty) return 0
-    require(seqs.zipWithIndex.forall { case (s, i) =>
-      // written order: everything before the first behind store is at
-      // target; everything after the first behind store is behind too
-      s.contains(target) || s.forall(_ == target - 1) ||
-        (s.isEmpty && target == 0)
-    }, s"heal: stores under $root are neither in-step nor a torn prefix " +
-      s"(seqs=$seqs target=$target) — not a crash shape this can repair")
+    // in write order: the stores after the prefix at target
+    val torn = seqs.dropWhile(_.contains(target))
+    if (torn.isEmpty) return 0
+    val behind = if (target == 0) None else Some(target - 1)
+    require(torn.forall(_ == behind),
+      s"heal: stores under $root are neither in-step nor a torn prefix " +
+        s"(seqs=$seqs target=$target) — not a crash shape this can repair")
     val newCorpus = Sinks.Versioned.readAt(spark, corpusRoot(root), target)
-    if (target == 0) {
-      // torn bootstrap: recompute everything from corpus v0
-      val st = bootstrapState(newCorpus, textCol, idCol, n, threshold)
-      val edges = st.edges.localCheckpoint()
-      def missing(r: String) = Sinks.Versioned.versions(spark, r).isEmpty
-      if (missing(edgesRoot(root)))
-        Sinks.Versioned.writeDelta(edges, edgesRoot(root)): Unit
-      if (missing(shRoot(root)))
-        Sinks.Versioned.writeDelta(st.shingles, shRoot(root)): Unit
-      if (missing(szRoot(root)))
-        Sinks.Versioned.writeDelta(st.sizes, szRoot(root)): Unit
-      if (missing(tombRoot(root)))
-        Sinks.Versioned.writeDelta(st.tomb, tombRoot(root)): Unit
-      if (missing(curatedRoot(root)))
-        Sinks.Versioned.write(curatedFromEdges(newCorpus, idCol,
-          Sinks.Versioned.read(spark, edgesRoot(root))), curatedRoot(root)): Unit
-      return behind.size
+    if (target == 0)
+      releaseBootstrap(newCorpus, root, 0, textCol, idCol, n, threshold)
+    else {
+      val t = transitionState(
+        Sinks.Versioned.readAt(spark, corpusRoot(root), target - 1), newCorpus,
+        stateAt(spark, root, target - 1), textCol, idCol, n, threshold)
+      releaseTransition(newCorpus, t, t.staleIds.count() == 0, root, idCol)
     }
-    val prevCorpus = Sinks.Versioned.readAt(spark, corpusRoot(root), target - 1)
-    val t = transitionState(prevCorpus, newCorpus,
-      stateAt(spark, root, target - 1), textCol, idCol, n, threshold)
-    val nStale = t.staleIds.count()
-    val newEdges = t.newEdges.localCheckpoint()
-    def behindRoot(r: String) =
-      Sinks.Versioned.versions(spark, r).lastOption.forall(_ < target)
-    if (behindRoot(edgesRoot(root))) {
-      if (nStale == 0) Sinks.Versioned.writeDelta(newEdges, edgesRoot(root))
-      else Sinks.Versioned.write(t.keptEdges.unionByName(newEdges), edgesRoot(root))
-    }: Unit
-    if (behindRoot(shRoot(root)))
-      Sinks.Versioned.writeDelta(t.shingleDelta, shRoot(root)): Unit
-    if (behindRoot(szRoot(root)))
-      Sinks.Versioned.writeDelta(t.sizeDelta, szRoot(root)): Unit
-    if (behindRoot(tombRoot(root)))
-      Sinks.Versioned.writeDelta(t.tombDelta, tombRoot(root)): Unit
-    if (behindRoot(curatedRoot(root)))
-      Sinks.Versioned.write(curatedFromEdges(newCorpus, idCol,
-        Sinks.Versioned.read(spark, edgesRoot(root))), curatedRoot(root)): Unit
-    behind.size
   }
 
   /** Time-travel read of a published curation (the release audit pairs

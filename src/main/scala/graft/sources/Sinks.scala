@@ -371,14 +371,24 @@ object Sinks {
         }
         sum
     }
-    val numFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+    writeLaidOut(df, totalBytes, targetBytes, sortCol, SaveMode.Overwrite, outPath)
+  }
+
+  /** The compaction layout: `df`, holding `bytes` of parquet, written to
+    * `path` as ~`targetBytes` files — range-partitioned and sorted on
+    * `sortCol`, or coalesced when there is none. Returns the file count.
+    */
+  private def writeLaidOut(df: DataFrame, bytes: Long, targetBytes: Long,
+                           sortCol: Option[String], mode: SaveMode,
+                           path: String): Int = {
+    val numFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val out = sortCol match {
       case Some(c) =>
         import org.apache.spark.sql.functions.col
         df.repartitionByRange(numFiles, col(c)).sortWithinPartitions(c)
       case None => df.coalesce(numFiles)
     }
-    out.write.mode(SaveMode.Overwrite).parquet(outPath)
+    out.write.mode(mode).parquet(path)
     numFiles
   }
 
@@ -393,13 +403,16 @@ object Sinks {
     *     v00001/part-... .parquet  # being written, unreferenced until its manifest lands
     * }}}
     *
-    * A manifest names its version's data either as one whole dir (the
-    * `vNNNNN` line [[write]]/[[compact]]/[[snapshot]] emit) or as an
-    * explicit FILE list (`#f` lines) — the delta-publish shape
-    * ([[writeDelta]]/[[snapshotDelta]]) where a new version writes only
-    * its delta's files and references the previous version's for the
-    * rest, so publish cost is ∝ delta instead of corpus. Files are
-    * shared across manifests, never copied.
+    * Every writer takes the same next-version step (next seq, clear an
+    * orphan dir, write `v{seq}`, publish its manifest), and a manifest
+    * takes one of two shapes. A whole-dir manifest is the one line
+    * `vNNNNN` ([[write]], [[snapshot]], and [[compact]], which appends
+    * the `#src` lines it carries); a delta manifest whose file list
+    * comes out empty falls back to it. A delta manifest is an explicit
+    * FILE list (`#f` lines, [[writeDelta]]/[[snapshotDelta]]): a new
+    * version writes only its delta's files and references the previous
+    * version's for the rest, so publish cost is ∝ delta instead of
+    * corpus. Files are shared across manifests, never copied.
     *
     * Invariants that make mid-rewrite reads safe:
     *   - data dirs are IMMUTABLE once their manifest exists: a rewrite
@@ -440,9 +453,9 @@ object Sinks {
       * [[snapshotDelta]]. Two generations share one parser:
       *
       *   - v1 (the original format): a single bare line `vNNNNN` — the
-      *     whole dir is the version's data. [[write]] and [[compact]]
-      *     still emit this shape, so everything that worked keeps
-      *     working byte-for-byte.
+      *     whole dir is the version's data. [[write]], [[snapshot]] and
+      *     [[compact]] emit this shape (compact followed by the `#src`
+      *     lines it carries), as does a delta publish with no files.
       *   - v2 (delta publish): `#f <relpath>` lines name the version's
       *     data FILES — a new version carries the previous version's
       *     file list plus the delta's freshly-written files, so a
@@ -587,27 +600,17 @@ object Sinks {
         (seq, s"$root/${refs.dirs.head}")
       }
 
-    private def publish(spark: org.apache.spark.sql.SparkSession,
-                        root: String, seq: Int): Unit =
-      publishContent(spark, root, seq, f"v$seq%05d")
-
+    /** Publish version `seq`'s manifest: `files` as `#f` lines, or, when
+      * there are none, the version's own dir (the whole-dir shape, also
+      * the empty-table one: spark.read.parquet of zero paths throws),
+      * then `srcs` as `#src` lines.
+      */
     private def publishRefs(spark: org.apache.spark.sql.SparkSession,
                             root: String, seq: Int,
-                            files: Seq[String], srcs: Seq[String],
-                            dirFallback: Option[String] = None): Unit = {
-      // an all-empty file list cannot be scanned (spark.read.parquet of
-      // zero paths throws) — fall back to a dir ref on the version's own
-      // (possibly schema-only) dir, the legacy empty-table shape
+                            files: Seq[String], srcs: Seq[String]): Unit = {
       val dataLines =
-        if (files.nonEmpty) files.map(fp => s"#f $fp")
-        else Seq(dirFallback.getOrElse(f"v$seq%05d"))
+        if (files.nonEmpty) files.map(fp => s"#f $fp") else Seq(f"v$seq%05d")
       val content = (dataLines ++ srcs.map(s => s"#src $s")).mkString("\n")
-      publishContent(spark, root, seq, content)
-    }
-
-    private def publishContent(spark: org.apache.spark.sql.SparkSession,
-                               root: String, seq: Int,
-                               content: String): Unit = {
       val f = fs(spark, root)
       val tmp = new Path(root, f".tmp-manifest-$seq%05d")
       // self-heal: a crash between create and rename leaves a stale tmp
@@ -636,18 +639,39 @@ object Sinks {
       if (f.exists(dir)) f.delete(dir, true): Unit
     }
 
+    /** The step every writer takes to the next version: take the next
+      * seq, clear an orphan dir at it ([[clearOrphan]]), let `fill`
+      * write the version's data dir, then publish its manifest. With
+      * `carried` the manifest lists those files plus the new dir's part
+      * files; without, it names the whole dir. `srcs` are the absorbed
+      * source files ([[snapshotDelta]]'s bookkeeping). The data write
+      * completes BEFORE the manifest rename, so the version is never
+      * referenced while partial. Returns the new seq.
+      */
+    private def nextVersion(spark: org.apache.spark.sql.SparkSession,
+                            root: String, carried: Option[Seq[String]],
+                            srcs: Seq[String])(fill: String => Unit): Int = {
+      val seq = manifests(spark, root).lastOption.map(_._1 + 1).getOrElse(0)
+      clearOrphan(spark, root, seq)
+      val dir = f"v$seq%05d"
+      fill(s"$root/$dir")
+      publishRefs(spark, root, seq,
+        carried.fold(Seq.empty[String])(_ ++ listPartFiles(spark, root, dir)), srcs)
+      seq
+    }
+
+    /** The live version's manifest, if any. */
+    private def liveRefs(spark: org.apache.spark.sql.SparkSession,
+                         root: String): Option[ManifestRefs] =
+      manifests(spark, root).lastOption.map { case (_, p) => readManifest(spark, root, p) }
+
     /** Write `df` as the next version and publish its manifest. Returns
       * the new seq. The data write completes BEFORE the manifest rename,
       * so the version is never referenced while partial.
       */
-    def write(df: DataFrame, root: String): Int = {
-      val spark = df.sparkSession
-      val seq = manifests(spark, root).lastOption.map(_._1 + 1).getOrElse(0)
-      clearOrphan(spark, root, seq)
-      df.write.mode(SaveMode.ErrorIfExists).parquet(f"$root/v$seq%05d")
-      publish(spark, root, seq)
-      seq
-    }
+    def write(df: DataFrame, root: String): Int =
+      nextVersion(df.sparkSession, root, None, Nil)(
+        df.write.mode(SaveMode.ErrorIfExists).parquet(_))
 
     /** Read the live version. Scan set resolves NOW: the returned frame
       * keeps reading this complete layout even if a newer version lands.
@@ -675,17 +699,11 @@ object Sinks {
       */
     def writeDelta(delta: DataFrame, root: String): Int = {
       val spark = delta.sparkSession
-      val prev = manifests(spark, root).lastOption
-      val seq = prev.map(_._1 + 1).getOrElse(0)
-      clearOrphan(spark, root, seq)
-      delta.write.mode(SaveMode.ErrorIfExists).parquet(f"$root/v$seq%05d")
-      val carried = prev.map { case (_, p) =>
-        val refs = readManifest(spark, root, p)
-        (expandedFiles(spark, root, refs), refs.srcs)
-      }.getOrElse((Seq.empty[String], Seq.empty[String]))
-      publishRefs(spark, root, seq,
-        carried._1 ++ listPartFiles(spark, root, f"v$seq%05d"), carried._2)
-      seq
+      val prev = liveRefs(spark, root)
+      nextVersion(spark, root,
+        Some(prev.toSeq.flatMap(expandedFiles(spark, root, _))),
+        prev.toSeq.flatMap(_.srcs))(
+        delta.write.mode(SaveMode.ErrorIfExists).parquet(_))
     }
 
     /** [[Sinks.compact]] against a versioned root: compacts the live
@@ -701,26 +719,15 @@ object Sinks {
     def compact(spark: org.apache.spark.sql.SparkSession, root: String,
                 targetBytes: Long = 128L << 20,
                 sortCol: Option[String] = None): Int = {
-      val (seq, p) = manifests(spark, root).lastOption.getOrElse(
+      val refs = liveRefs(spark, root).getOrElse(
         throw new java.io.FileNotFoundException(s"no published version under $root"))
-      val refs = readManifest(spark, root, p)
-      clearOrphan(spark, root, seq + 1)
       val f = fs(spark, root)
       val totalBytes = expandedFiles(spark, root, refs)
         .map(fp => f.getFileStatus(new Path(root, fp)).getLen).sum
-      val numFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-      val df = readAt(spark, root, seq)
-      val out = sortCol match {
-        case Some(c) =>
-          import org.apache.spark.sql.functions.col
-          df.repartitionByRange(numFiles, col(c)).sortWithinPartitions(c)
-        case None => df.coalesce(numFiles)
-      }
-      out.write.mode(SaveMode.ErrorIfExists).parquet(f"$root/v${seq + 1}%05d")
+      val df = read(spark, root)
       // dir-style manifest (current() keeps working) + carried srcs
-      publishRefs(spark, root, seq + 1, Seq.empty, refs.srcs,
-        dirFallback = Some(f"v${seq + 1}%05d"))
-      seq + 1
+      nextVersion(spark, root, None, refs.srcs)(
+        writeLaidOut(df, totalBytes, targetBytes, sortCol, SaveMode.ErrorIfExists, _): Unit)
     }
 
     /** Publish a compacted SNAPSHOT of an external directory as this
@@ -748,12 +755,8 @@ object Sinks {
     def snapshot(spark: org.apache.spark.sql.SparkSession, srcDir: String,
                  root: String, targetBytes: Long = 128L << 20,
                  sortCol: Option[String] = None): Int = {
-      val seq = manifests(spark, root).lastOption.map(_._1 + 1).getOrElse(0)
-      clearOrphan(spark, root, seq)
-      Sinks.compact(spark.read.parquet(srcDir), srcDir, f"$root/v$seq%05d",
-        targetBytes, sortCol)
-      publish(spark, root, seq)
-      seq
+      nextVersion(spark, root, None, Nil)(
+        Sinks.compact(spark.read.parquet(srcDir), srcDir, _, targetBytes, sortCol): Unit)
     }
 
     /** Recursive srcDir-relative parquet file listing — the unit of
@@ -807,23 +810,15 @@ object Sinks {
     def snapshotDelta(spark: org.apache.spark.sql.SparkSession, srcDir: String,
                       root: String, targetBytes: Long = 128L << 20,
                       sortCol: Option[String] = None): Int = {
-      val prev = manifests(spark, root).lastOption
-      val seq = prev.map(_._1 + 1).getOrElse(0)
-      val prevRefs = prev.map { case (_, p) => readManifest(spark, root, p) }
+      val prevRefs = liveRefs(spark, root)
       val srcFiles = listSrcFiles(spark, srcDir)
       val legacyPrev = prevRefs.exists(r => r.srcs.isEmpty && !r.isEmptyData)
-      if (prevRefs.isEmpty || legacyPrev) {
+      if (prevRefs.isEmpty || legacyPrev)
         // no absorbed-source bookkeeping to diff against: one full
         // snapshot that STARTS the bookkeeping (legacy manifests can't
         // say what they already absorbed — re-absorbing would duplicate)
-        clearOrphan(spark, root, seq)
-        Sinks.compact(spark.read.parquet(srcDir), srcDir, f"$root/v$seq%05d",
-          targetBytes, sortCol)
-        publishRefs(spark, root, seq,
-          listPartFiles(spark, root, f"v$seq%05d"), srcFiles,
-          dirFallback = Some(f"v$seq%05d"))
-        return seq
-      }
+        return nextVersion(spark, root, Some(Nil), srcFiles)(
+          Sinks.compact(spark.read.parquet(srcDir), srcDir, _, targetBytes, sortCol): Unit)
       val absorbed = prevRefs.get.srcs.toSet
       val gone = absorbed -- srcFiles.toSet
       require(gone.isEmpty,
@@ -832,30 +827,17 @@ object Sinks {
           "be append-only at file granularity between snapshots; a rewritten " +
           "source needs a full snapshot() to re-baseline")
       val newSrc = srcFiles.filterNot(absorbed)
-      val carried = expandedFiles(spark, root, prevRefs.get)
-      if (newSrc.isEmpty) {
-        // nothing new: publish a version referencing the previous one
-        publishRefs(spark, root, seq, carried, prevRefs.get.srcs)
-        return seq
-      }
-      clearOrphan(spark, root, seq)
+      val carried = Some(expandedFiles(spark, root, prevRefs.get))
+      // nothing new: publish a version referencing the previous one
+      if (newSrc.isEmpty)
+        return nextVersion(spark, root, carried, prevRefs.get.srcs)(_ => ())
       val srcFs = new Path(srcDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val deltaBytes = newSrc
         .map(fp => srcFs.getFileStatus(new Path(srcDir, fp)).getLen).sum
-      val numFiles = math.max(1, math.ceil(deltaBytes.toDouble / targetBytes).toInt)
       val df = spark.read.option("basePath", srcDir)
         .parquet(newSrc.map(fp => s"$srcDir/$fp"): _*)
-      val out = sortCol match {
-        case Some(c) =>
-          import org.apache.spark.sql.functions.col
-          df.repartitionByRange(numFiles, col(c)).sortWithinPartitions(c)
-        case None => df.coalesce(numFiles)
-      }
-      out.write.mode(SaveMode.ErrorIfExists).parquet(f"$root/v$seq%05d")
-      publishRefs(spark, root, seq,
-        carried ++ listPartFiles(spark, root, f"v$seq%05d"),
-        prevRefs.get.srcs ++ newSrc)
-      seq
+      nextVersion(spark, root, carried, prevRefs.get.srcs ++ newSrc)(
+        writeLaidOut(df, deltaBytes, targetBytes, sortCol, SaveMode.ErrorIfExists, _): Unit)
     }
 
     /** Drop all but the newest `keep` versions (manifests + any data

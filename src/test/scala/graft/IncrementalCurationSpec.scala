@@ -129,8 +129,7 @@ class IncrementalCurationSpec extends SparkSpec {
         sortedRows(TextDedup.shingleSizes(prev, "text", "doc_id")),
         s"$label: size store diverged")
       st = IncrementalCuration.applyTransition(st,
-        IncrementalCuration.transitionState(prev, cur, st, "text", "doc_id"),
-        _.localCheckpoint())
+        IncrementalCuration.transitionState(prev, cur, st, "text", "doc_id"))
     }
     assert(sortedRows(IncrementalCuration.validShingles(st)) ===
       sortedRows(TextDedup.hashedShingles(v3, "text", "doc_id")))
@@ -216,6 +215,7 @@ class IncrementalCurationSpec extends SparkSpec {
     // simulate every crash window: publish v1 fully, then write ONLY a
     // prefix of v2's stores (corpus, or corpus+edges, ...) and let heal
     // complete the rest — the healed version must equal a clean publish
+    val Sinks = graft.sources.Sinks
     val cleanRoot = java.nio.file.Files.createTempDirectory("inc-heal-clean").toString
     IncrementalCuration.bootstrap(v1, cleanRoot, "text", "doc_id")
     IncrementalCuration.publishIncrement(v2, cleanRoot, "text", "doc_id")
@@ -227,7 +227,6 @@ class IncrementalCurationSpec extends SparkSpec {
       // order corpus, edges, sh, sz, tomb, curated)
       val st = IncrementalCuration.readState(spark, root)
       val t = IncrementalCuration.transitionState(v1, v2, st, "text", "doc_id")
-      val Sinks = graft.sources.Sinks
       val stores: Seq[() => Unit] = Seq(
         () => { Sinks.Versioned.write(v2, s"$root/corpus"): Unit },
         () => { Sinks.Versioned.write(t.edges, s"$root/edges"): Unit },
@@ -248,6 +247,56 @@ class IncrementalCurationSpec extends SparkSpec {
       assertIdentity(v3,
         IncrementalCuration.edgesAt(spark, root, 2),
         IncrementalCuration.curatedAt(spark, root, 2), s"prefix $prefixLen v3")
+    }
+
+    // torn bootstraps: the first prefixLen stores of version 0 landed;
+    // heal recomputes the rest from corpus v0
+    val cleanBoot = java.nio.file.Files.createTempDirectory("inc-heal-boot-clean").toString
+    IncrementalCuration.bootstrap(v1, cleanBoot, "text", "doc_id")
+    for (prefixLen <- 1 to 5) {
+      val root = java.nio.file.Files.createTempDirectory(s"inc-heal-boot-$prefixLen").toString
+      val b = IncrementalCuration.bootstrapState(v1, "text", "doc_id")
+      val stores: Seq[() => Unit] = Seq(
+        () => { Sinks.Versioned.write(v1, s"$root/corpus"): Unit },
+        () => { Sinks.Versioned.writeDelta(b.edges, s"$root/edges"): Unit },
+        () => { Sinks.Versioned.writeDelta(b.shingles, s"$root/sh"): Unit },
+        () => { Sinks.Versioned.writeDelta(b.sizes, s"$root/sz"): Unit },
+        () => { Sinks.Versioned.writeDelta(b.tomb, s"$root/tomb"): Unit })
+      stores.take(prefixLen).foreach(_.apply())
+      val healed = IncrementalCuration.heal(spark, root, "text", "doc_id")
+      assert(healed === 6 - prefixLen, s"bootstrap prefix $prefixLen healed $healed")
+      assert(IncrementalCuration.heal(spark, root, "text", "doc_id") === 0)
+      for (store <- Seq("corpus", "edges", "curated", "sh", "sz", "tomb"))
+        assert(sortedRows(Sinks.Versioned.readAt(spark, s"$root/$store", 0)) ===
+          sortedRows(Sinks.Versioned.readAt(spark, s"$cleanBoot/$store", 0)),
+          s"bootstrap prefix $prefixLen: healed $store diverged from a clean bootstrap")
+      assert(IncrementalCuration.publishIncrement(v2, root, "text", "doc_id") === 1)
+      assertIdentity(v2,
+        IncrementalCuration.edgesAt(spark, root, 1),
+        IncrementalCuration.curatedAt(spark, root, 1), s"bootstrap prefix $prefixLen v2")
+    }
+
+    // shapes no crash leaves are refused, not healed: a store at the
+    // target after one behind it (sh landed, edges did not), and a
+    // store with no versions at a target above 0
+    def refused(label: String)(tear: String => Unit): Unit = {
+      val root = java.nio.file.Files.createTempDirectory(s"inc-heal-$label").toString
+      tear(root)
+      val e = intercept[IllegalArgumentException] {
+        IncrementalCuration.heal(spark, root, "text", "doc_id")
+      }
+      assert(e.getMessage.contains("torn prefix"), s"$label: ${e.getMessage}")
+    }
+    refused("non-prefix") { root =>
+      IncrementalCuration.bootstrap(v1, root, "text", "doc_id")
+      val t = IncrementalCuration.transitionState(v1, v2,
+        IncrementalCuration.readState(spark, root), "text", "doc_id")
+      Sinks.Versioned.write(v2, s"$root/corpus"): Unit
+      Sinks.Versioned.writeDelta(t.shingleDelta, s"$root/sh"): Unit
+    }
+    refused("empty-store") { root =>
+      Sinks.Versioned.write(v1, s"$root/corpus"): Unit
+      Sinks.Versioned.write(v2, s"$root/corpus"): Unit
     }
   }
   test("bootstrapState ≡ fullEdges, hashedShingles and shingleSizes on sf0.001 (rows and schema)") {

@@ -259,9 +259,10 @@ class PlanAuditSpec extends SparkSpec {
   test("IncrementalCuration.fullEdges/incrementEdges: no all-pairs plan, un-checkpointed") {
     // the r16 ADVICE finding: q_inc_curate's localCheckpoint()s truncate
     // lineage, so its plan audit sees only the LAST transition. Audit
-    // the raw builders directly — every stage (bootstrap pair-gen, diff,
-    // kept-edge anti-joins, within-delta and delta×unchanged pair-gen)
-    // lives in ONE un-truncated plan here.
+    // the raw builders directly: the bootstrap pair-gen, and the
+    // kept-edge anti-joins, within-delta and delta×unchanged pair-gen
+    // over the delta-sized checkpoints incrementEdges takes of its diff
+    // and its delta's hash frames. The diff is audited by itself.
     import graft.pipelines.IncrementalCuration
     val docs = graft.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
@@ -277,6 +278,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(!pInc.contains("CartesianProduct") &&
       !pInc.contains("BroadcastNestedLoopJoin"),
       s"incrementEdges regressed to an all-pairs plan:\n${pInc.take(4000)}")
+    // incrementEdges checkpoints its diff, so the diff's full-outer join
+    // is audited on its own
+    val pDiff = plan(graft.operators.Diff.snapshotDiff(prev, docs, Seq("doc_id"), Seq("text")))
+    assert(pDiff.contains("FullOuter") && !pDiff.contains("CartesianProduct") &&
+      !pDiff.contains("BroadcastNestedLoopJoin"),
+      s"snapshotDiff regressed to an all-pairs plan:\n${pDiff.take(4000)}")
   }
 
   test("store-backed transition: the shingle store is never shuffled") {
