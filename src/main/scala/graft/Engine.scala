@@ -2,43 +2,24 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The engine's `SPARK_GRAFT_*` tuning knobs, parsed in one place.
-  *
-  * A missing, non-numeric or non-positive value falls back to the
-  * default, so a bad A/B override degrades to the measured setting
-  * instead of crashing a query. `SPARK_GRAFT_FAN_DISABLE` is a
-  * presence switch: set to anything, it disables
-  * [[graft.operators.Partitioning.fanOutSmallScan]].
+/** `SPARK_GRAFT_CPUS`, the engine's one deployment setting: the
+  * local-mode core count (default nproc). A missing, non-numeric or
+  * non-positive value falls back to nproc instead of crashing a query.
   * (`SPARK_GRAFT_SF_DIR`, Bench's input path, is a deployment path,
-  * not a knob.)
-  *
-  * @param cpus           `SPARK_GRAFT_CPUS`: local-mode cores (default nproc)
-  * @param initialShuffle `SPARK_GRAFT_INITIAL_SHUFFLE`: pins the initial
-  *                       shuffle bucket count (default: size-derived,
-  *                       see [[Engine.initialShufflePartitions]])
-  * @param minPartition   `SPARK_GRAFT_MIN_PARTITION`: AQE coalesce floor
-  *                       in bytes (default 128 KiB)
-  * @param fanDisable     `SPARK_GRAFT_FAN_DISABLE` is set
+  * not a setting.) The physical layout has no setting: initial shuffle
+  * buckets, the AQE coalesce floor and scan parallelism are each a
+  * constant or a rule of input bytes, decided by measurement
+  * (BASELINE.md, "Layout policy").
   */
-final case class Knobs(cpus: Int, initialShuffle: Option[Int],
-                       minPartition: Long, fanDisable: Boolean)
+final case class Knobs(cpus: Int)
 
 object Knobs {
   /** Pure parse of an environment map (specs pass their own). */
-  def parse(env: Map[String, String]): Knobs = {
-    def positive(key: String): Option[Long] =
-      env.get(key).flatMap(_.trim.toLongOption).filter(_ > 0)
-    def positiveInt(key: String): Option[Int] =
-      positive(key).filter(_ <= Int.MaxValue).map(_.toInt)
-    Knobs(
-      cpus = positiveInt("SPARK_GRAFT_CPUS")
-        .getOrElse(Runtime.getRuntime.availableProcessors()),
-      initialShuffle = positiveInt("SPARK_GRAFT_INITIAL_SHUFFLE"),
-      minPartition = positive("SPARK_GRAFT_MIN_PARTITION").getOrElse(128L << 10),
-      fanDisable = env.contains("SPARK_GRAFT_FAN_DISABLE"))
-  }
+  def parse(env: Map[String, String]): Knobs =
+    Knobs(env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors()))
 
-  /** This process's knobs, read from `sys.env` once. */
+  /** This process's setting, read from `sys.env` once. */
   lazy val env: Knobs = parse(sys.env)
 }
 
@@ -46,7 +27,7 @@ object Knobs {
   * builder in the program, so Bench, Verify, the probes and the test
   * suite run the same confs.
   *
-  * The knobs are the ones that matter on a real cluster too: AQE on
+  * The confs are the ones that matter on a real cluster too: AQE on
   * (runtime shuffle-partition coalescing + skew-join splitting), UTC
   * session time zone (oracle parity), shuffle partitions sized to the
   * parallelism at hand rather than the 200 default.
@@ -70,16 +51,14 @@ object Engine {
     * sf10 (~1.75 GB → ~219): same regime as the flat 8× OOM fix.
     *
     * The input volume is [[graft.operators.Partitioning.scanFootprint]]'s
-    * byte count for `dataDir` (the same walk the fan-out rule uses).
-    *
-    * `SPARK_GRAFT_INITIAL_SHUFFLE` overrides for cluster tuning and
-    * A/B runs; callers that cannot name a data dir keep the `cpus * 8`
-    * middle ground.
+    * byte count for `dataDir`. At sf1 (~160 MB → 19 buckets at 4
+    * cores) the rule beat a flat `cpus * 8` = 32 over the 18-query
+    * pair/cluster family (three interleaved fresh-JVM Bench runs per
+    * arm): 134.3 s against 146.0 s, 8 queries >10 % slower at 32 and
+    * none >10 % faster (BASELINE.md, "Layout policy").
     */
-  def initialShufflePartitions(cpus: Int, dataDir: String,
-                               knobs: Knobs = Knobs.env): Int =
-    knobs.initialShuffle.getOrElse(sizeInitialPartitions(cpus,
-      graft.operators.Partitioning.scanFootprint(dataDir)._2))
+  def initialShufflePartitions(cpus: Int, dataDir: String): Int =
+    sizeInitialPartitions(cpus, graft.operators.Partitioning.scanFootprint(dataDir)._2)
 
   /** The pure sizing rule behind [[initialShufflePartitions]]:
     * one initial bucket per 8 MiB of on-disk input, clamped to
@@ -90,38 +69,30 @@ object Engine {
 
   /** Every conf [[session]] sets, as one map. `extraConfs` are applied
     * LAST (they win over the defaults) — for caller-specific static
-    * confs that must be set before the session exists. A known
-    * `dataDir` sizes the initial shuffle bucket count from the input
-    * volume ([[initialShufflePartitions]]).
+    * confs that must be set before the session exists. `dataDir`
+    * sizes the initial shuffle bucket count from the input volume
+    * ([[initialShufflePartitions]]); without one the rule sizes 0
+    * bytes, i.e. `cpus` buckets.
     */
   private[graft] def confs(cpus: Int,
                            extraConfs: Map[String, String] = Map.empty,
-                           dataDir: Option[String] = None,
-                           knobs: Knobs = Knobs.env): Map[String, String] =
+                           dataDir: Option[String] = None): Map[String, String] =
     Map(
       "spark.master" -> s"local[$cpus]",
       "spark.sql.shuffle.partitions" -> cpus.toString,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      // Pre-coalesce shuffle bucket count ABOVE the core count, so AQE
-      // sizes reduce-side partitions from data volume instead of being
-      // pinned at `cpus`. With 32 buckets a 10×-scale hash aggregate
-      // lands ~2^24 keys in ONE task (its BytesToBytesMap doubles to a
-      // 128 MiB pointer array; 32 such tasks under an 8 GiB heap OOM'd
-      // the r18 full-surface rehearsal on q_inc_clusters' pair stream).
-      // With 8×cpus initial buckets the same stage's per-task state is
-      // 8× smaller and spills incrementally; small shuffles still
-      // coalesce back to ~cpus (parallelismFirst), so sf0.1 plans keep
-      // their shape. Streaming state-store layout is untouched — it
-      // keys on spark.sql.shuffle.partitions, which stays `cpus`, so
-      // existing checkpoints keep restoring. This is the local stand-in
-      // for the cluster-side rule: initial shuffle partitions track
-      // data scale (files.maxPartitionBytes-ish), AQE owns the final
-      // count. A caller naming its data dir gets the size-derived
-      // count instead (see initialShufflePartitions above).
+      // Pre-coalesce shuffle bucket count sized from the input volume
+      // (initialShufflePartitions above), so at scale AQE sizes
+      // reduce-side partitions from data volume instead of being pinned
+      // at `cpus`: pinned at 32, a 10×-scale hash aggregate landed
+      // ~2^24 keys in ONE task and OOM'd the r18 8 GiB rehearsal on
+      // q_inc_clusters' pair stream. Streaming state-store layout is
+      // untouched — it keys on spark.sql.shuffle.partitions, which
+      // stays `cpus`, so existing checkpoints keep restoring.
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
-        dataDir.fold(knobs.initialShuffle.getOrElse(cpus * 8))(
-          initialShufflePartitions(cpus, _, knobs)).toString,
+        sizeInitialPartitions(cpus,
+          dataDir.fold(0L)(graft.operators.Partitioning.scanFootprint(_)._2)).toString,
       // AQE coalesce floor 1 MiB → 128 KiB: the default folds every
       // sub-MiB shuffle to ONE task, serializing compute-dense reduce
       // stages (posting-list pair explode, CC star rounds, banded
@@ -134,9 +105,12 @@ object Engine {
       // improve, worst regression +0.5 s (md5 panel twins). Scale-safe:
       // a fixed per-task byte floor, not a core-count constant — at
       // production shuffle sizes the 64 MiB advisory target governs
-      // and this floor is unreachable.
+      // and this floor is unreachable. Re-measured at sf1 on 4 cores
+      // against the 1 MiB default (BASELINE.md, "Layout policy"): 134.3 s
+      // against 150.9 s over the same family, 8 queries >10 % slower at
+      // 1 MiB and none faster.
       "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
-        knobs.minPartition.toString,
+        (128L << 10).toString,
       "spark.sql.session.timeZone" -> "UTC",
       // testdata events.parquet carries TIMESTAMP(NANOS); Spark only
       // supports micros — read nanos as long, Tables.events converts.
@@ -334,6 +308,13 @@ object Tables {
     * task launches instead of 170 (sum executor time 272 s vs 25 s) —
     * +2.2 s wall. The wide form is a no-op at scale (fanOutSmallScan
     * decides from file metadata).
+    *
+    * The 50 wide picks in SparkEntry (49 queries over the four `*Wide`
+    * loaders) stand on the 4-core sf0.1 A/B recorded in
+    * [[graft.operators.Partitioning]]: −22 % over the family. Eight
+    * picks measured faster raw, two by more than 10 % (q_curate_lsh
+    * 2.88 → 2.32 s, q_dedup_clusters 0.90 → 0.81 s); they keep the
+    * wide loader until one loader rule replaces the picks.
     */
   def documentsWide(s: SparkSession, d: String): DataFrame =
     graft.operators.Partitioning.fanOutSmallScan(

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ExplainMode
+
 /** Plan reader for any `SparkEntry.queries` entry:
   * `runMain graft.Explain <sfDir> <query...>` prints each query's
   * FORMATTED plan (the post-AQE initial physical plan — scans,
@@ -8,6 +11,10 @@ package graft
   * until it is the plan you'd WANT at 100 TB, not the first one that
   * passed (unpushed filters, avoidable exchanges, missing broadcasts,
   * WSCG gaps).
+  *
+  * With no query names it prints PLANS.md, the committed plans of the
+  * flagship queries ([[picks]]):
+  * `runMain graft.Explain <sf0.001 dir>` with stdout to PLANS.md.
   *
   * Known limit, flagged in the output: operators that materialize
   * eagerly at CONSTRUCTION (pageRank rounds, ccnetBuckets/
@@ -19,19 +26,94 @@ package graft
   * UI during a Bench run.
   */
 object Explain {
+  /** PLANS.md's flagship queries, each with the plan property it shows. */
+  val picks: Seq[(String, String)] = Seq(
+    "q1_agg" -> "pricing summary: pushdown + pruning + partial aggregation",
+    "q3_top10" -> "3-table join: broadcast dimension, shuffle fact agg",
+    "q_recon" -> "reconciliation: pre-agg below full-outer join",
+    "q_j6_containment" -> "containment theta-join: broadcast nested loop",
+    "q_minhash_pairs" -> "MinHash+LSH: map-only signatures (native expression), band self-join",
+    "q_ann_topk" -> "brute-force ANN: broadcast queries, single corpus pass",
+    "q_events_sessions" -> "sessionization: one shuffle on user_id + window",
+    "q_asof" -> "as-of join: union + running last, one shuffle",
+    "q_c_clean" -> "cleaning projection: from_json + translate, codegen'd, no UDF",
+    "q_p5_rowid" -> "row ids: sort + zipWithIndex (no single-partition window)",
+    "q_repetition" -> "repetition metrics: map-side folds + partial-aggregated gram counts, no window",
+    "q_ann_quantized" -> "int8 ANN: quantize once, broadcast queries, exact integer dot",
+    "q_contamination" -> "decontamination: hashed-gram semi-join, eval side broadcast",
+    "q_funnel" -> "funnel: step filter at the scan, ONE user shuffle + per-user fold",
+    "q_retention" -> "cohort retention: distinct activity matrix, cohort-partitioned window",
+    "q_chunk" -> "token-window chunking: zero-exchange map-side fan-out (sort is the oracle's)",
+    "q_embed_neardup" -> "multi-table LSH near-dup: native lsh_sig buckets, id-only candidate dedup, exact-cosine verify",
+    "q_image_frames" -> "pixel decode: mapPartitions codec (per-partition init), integer-exact features",
+    "q_range_join" -> "range join: interval grid explode + equi-join on cell (no nested loop)",
+    "q_vocab_div" -> "vocab drift: two partial-agg counts, full-outer token join, ulp-hardened JS sum",
+    "q_minhash_pairs_md5" -> "portable LSH twin: md5 double-hashing sigs, band self-join (DuckDB-oracled end to end)",
+    "q_recon_summary" -> "reconciliation summary: unordered detail, no Sort below the aggregate",
+    "q_lang_id" -> "language ID: one native single-pass expression, no per-language filter arrays",
+    "q_split" -> "train/val/test hash-split: map-side md5-interval assignment, zero extra shuffle",
+    "q_prep_pipeline" -> "prep capstone: dedup→gate→split→shard manifest in two shuffles",
+    "q_block_dedup" -> "block-level substring dedup: id-only first-occurrence agg, keep-join on (id, idx), bounded reassembly",
+    "q_hll_rollup" -> "persistable HLL sketches: algebraic register-max union, partial-aggregated",
+    "q_fuzzy_pairs" -> "edit-distance pairs: deletion-neighborhood equi-join on 8-byte hashes, dedup before levenshtein verify",
+    "q_lm_score" -> "bigram LM scoring: one-pass model counts, compact-key joins, 9dp-ln DECIMAL sums",
+    "q_bloom_join" -> "bloom semi-join reduction: codegen'd might_contain prune below the join, exact join absorbs false positives",
+    "q_semantic_dedup" -> "SemDeDup: broadcast centroid assignment, within-cell pairs only, CC on the tiny pair graph",
+    "q_kll_rollup" -> "KLL quantile-sketch rollup: object-agg partial pairs, estimates broadcast to the rank check",
+    "q_inc_clusters" -> "incremental CC: one checkpointed pair-gen, star-replay absorption of the new batch",
+    "q_bpe_docs" -> "production BPE encode: 80-rule mapPartitions fold over DISTINCT words only, corpus pays one split + one join-back",
+    "q_ann_ivf_capped" -> "IVF with hot-cell cap: broadcast occupancy semi-filter below the probe join, cap = observed max (identity here)",
+    "q_j7_key_discovery" -> "join-key discovery: one unpivot scan per side (2 scans for C candidates), single value equi-join",
+    "q_calibrated_gate" -> "calibrate-then-gate: grid-binned sweep scan + gate scan, 1-row cutoff broadcast between them",
+    "q_minhash_pairs_sampled" -> "sampled truth twin (the sf10 gate form): md5 quarter-sample exact pairs vs full-corpus LSH restricted to sampled endpoints",
+    "q_upsert" -> "keyed MERGE/upsert: broadcast anti-join of delta keys below the pass-through union — the base never shuffles",
+    "q_quality_classifier" -> "hashed linear quality gate: one native feature-fold expression per row, zero Exchanges before the oracle sort",
+    "q_dup_spans" -> "winnowed duplicated spans: native one-pass fingerprints, fp equi-join (never all-pairs), broadcast-anti hot cap, exact substr verify by id joins",
+    "q_domain_cap" -> "per-domain doc cap: salted two-phase top-k windows, scan pruned to doc_id, never SinglePartition",
+    "q_domain_sample" -> "domain-prior sampling: domain-sized weights broadcast, null-safe derived join key (the chain evaluates once), map-only verdict",
+    "q_ann_pq" -> "product-quantized ANN: per-subspace codebook broadcast, byte-code corpus side, ADC lookup-table scoring",
+    "q_anchor_text" -> "anchor-text rollup: one extraction materialized for both aggregations, struct-min top pick (no window), partial aggs",
+    "q_url_blocklist" -> "blocklist screen: bounded suffix explode, entry side broadcast (never all-pairs), hits-only join-back",
+    "q_random_proj" -> "JL projection: map-only native dot folds, single output-sort exchange",
+    "q_domain_tiered_cap" -> "authority-tiered cap: PageRank rounds ran at construction (checkpoint leaf), per-domain-k window + cap rollup visible",
+    "q_cdc_dedup" -> "content-defined chunking: native gear_cdc generate (map-only), one agg exchange + output sort — chunking itself never shuffles")
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     // Bench's session: the plans printed are the plans it measures
     val spark = Engine.session("graft-explain", dataDir = Some(sfDir))
-    for (q <- args.drop(1)) {
-      val df = SparkEntry.queries(q)(spark, sfDir)
-      println(s"\n=== $q ===")
-      val p = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      println(p)
-      if (p.contains("ExistingRDD") || p.contains("Scan ExistingRDD"))
-        println("[explain] NOTE: plan contains a checkpointed leaf — " +
+    // UTF-8 whatever the platform charset: PLANS.md is UTF-8
+    val out = new java.io.PrintStream(System.out, true, "UTF-8")
+    if (args.length > 1) for (q <- args.drop(1)) {
+      val p = formatted(SparkEntry.queries(q)(spark, sfDir))
+      out.println(s"\n=== $q ===")
+      out.println(p)
+      if (p.contains("ExistingRDD"))
+        out.println("[explain] NOTE: plan contains a checkpointed leaf — " +
           "upstream stages ran at construction and are NOT shown above")
+    } else {
+      def section(title: String, df: DataFrame): Unit =
+        out.print(s"\n## $title\n\n```\n${formatted(df)}\n```\n")
+      out.print(
+        s"""# PLANS — formatted physical plans of flagship queries
+           |
+           |Generated by `graft.Explain` (no query names) over the ${new java.io.File(sfDir).getName}
+           |fixtures at ${spark.sparkContext.defaultParallelism} cores: Bench's session, so the
+           |exchange widths are the ones Bench plans at that core count (plan
+           |shapes are size-independent before AQE). See SCALE.md for the design
+           |rationale and PlanAuditSpec for the CI assertions.
+           |""".stripMargin)
+      for ((name, why) <- picks) section(s"$name — $why", SparkEntry.queries(name)(spark, sfDir))
+      // q_bm25's zipWithIndex rank crosses an RDD boundary that hides the
+      // scoring plan from explain — print the pre-rank scoring stage, where
+      // the load-bearing properties (query-term filter below every agg,
+      // top-k as TakeOrderedAndProject) are visible.
+      section("q_bm25 (scoring stage) — BM25: query-term filter below all aggs, TakeOrderedAndProject top-k",
+        graft.operators.Retrieval.bm25Scored(Tables.documents(spark, sfDir), "text", "doc_id",
+          Seq("spark", "window", "join"), k = 20))
     }
     spark.stop()
   }

@@ -19,19 +19,12 @@ private[graft] object OracleCtes {
     * pieces. Shared between q_curate_full (row-for-row) and
     * q_curate_lsh (kept count inside its agreement verdict).
     */
-  /** The md5-sampled documents subquery both sampled-verdict oracles
-    * read from — the exact SQL twin of
-    * `TextFunctions.md5SampleFilter(col("doc_id"), 0.25)`.
-    */
   /** Fixed-budget md5 document panel — the SQL replay of
     * [[graft.operators.TextDedup.md5Panel]] (SF-invariant truth cost;
     * the fractional form keeps a constant SHARE of N², still quadratic).
     */
   def panelDocsSrc(budget: Int, tag: String): String =
     s"(SELECT doc_id, text FROM documents ORDER BY md5(CAST(doc_id AS VARCHAR) || ':$tag'), doc_id LIMIT $budget)"
-
-  def sampledDocsSrc(rate: Double): String =
-    s"(SELECT doc_id, text FROM documents WHERE md5(CAST(doc_id AS VARCHAR)) < '${graft.functions.TextFunctions.md5SampleThreshold(rate)}')"
 
   /** DuckDB replay of [[TextQuality.dsirFitFx]] + [[TextQuality.dsirWeights]]:
     * refits the 4096-bucket add-0.5-smoothed log-ratio table from the

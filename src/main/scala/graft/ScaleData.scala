@@ -68,7 +68,7 @@ object ScaleData {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleData <inDir> <outDir> [replicas]")
-    val spark = Engine.session("graft-scaledata")
+    val spark = Engine.session("graft-scaledata", dataDir = Some(args(0)))
     run(spark, args(0), args(1),
       if (args.length > 2) args(2).toInt else 10)
     spark.stop()

@@ -55,15 +55,9 @@ object Compat {
   def coerceNumericFill(c: Column, fill: Double = 0.0): Column =
     coalesce(coerceNumeric(c), lit(fill))
 
-  /** C5: int cast, null on failure (T-SQL TRY_CONVERT / astype(int) after fills). */
-  def tryLong(c: Column): Column = c.try_cast(LongType)
-
   /** C7: null-token replacement — members of the junk vocabulary → NULL. */
   def nullTokens(c: Column, tokens: Seq[String] = Seq("", "0")): Column =
     when(trim(c.cast(StringType)).isin(tokens: _*), lit(null)).otherwise(c)
-
-  /** C9: fallback fill from sibling column (missing a ← b). */
-  def fillFrom(a: Column, b: Column): Column = coalesce(a, b)
 
   /** C13: whitespace-blind lowercase normalize — join(s.split()).lower().
     * `translate` (per-char table lookup) instead of `regexp_replace`:
@@ -90,9 +84,6 @@ object Compat {
   def scrubControlChars(c: Column): Column =
     regexp_replace(c, "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]", "")
 
-  /** C20: first-of-month truncation. */
-  def monthStart(c: Column): Column = trunc(c, "month")
-
   /** C21: month-end from a "MMyy" filename token. */
   def monthEndFromMMyy(c: Column): Column = last_day(to_date(c, "MMyy"))
 
@@ -102,14 +93,6 @@ object Compat {
     */
   def rowKey(cols: Seq[Column], sep: String = "|"): Column =
     concat_ws(sep, cols.map(c => coalesce(c.cast(StringType), lit("nan"))): _*)
-
-  /** Exact-money sum with a deterministic result: per-value cast to
-    * DECIMAL(18,2) (exact), decimal sum (exact, order-independent), final
-    * cast back to DOUBLE. Double summation order varies across partitions /
-    * engines; this formulation hash-matches any engine that sums decimals.
-    */
-  def moneySum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
 
   /** Same trick for derived per-row double expressions (e.g. price*(1-disc)):
     * the per-row double arithmetic is IEEE-deterministic, the cast to

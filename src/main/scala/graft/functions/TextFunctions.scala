@@ -170,10 +170,6 @@ object TextFunctions {
   def fingerprint(c: Column): Column =
     md5(lower(regexp_replace(trim(nfc(c)), "\\s+", " ")))
 
-  /** 64-bit rolling-style fingerprint for cheap joins/partitioning. */
-  def fingerprint64(c: Column): Column =
-    xxhash64(lower(regexp_replace(trim(nfc(c)), "\\s+", " ")))
-
   /** Per-language stopword seed lists for the n-gram/stopword language-ID
     * heuristic. Tiny on purpose: they broadcast as literals inside the
     * expression tree.

@@ -18,9 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** D1: full-row distinct (`drop_duplicates()`). */
-  def distinctRows(df: DataFrame): DataFrame = df.dropDuplicates()
-
   /** D3: every member of any duplicate group (`duplicated(keep=False)`). */
   def duplicatesAll(df: DataFrame, keyCols: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*)

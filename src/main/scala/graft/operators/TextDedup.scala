@@ -340,22 +340,6 @@ object TextDedup {
       graft.plans.MinHashSig.sig(col("_sh"), k).as("sig"))
   }
 
-  /** Shuffle-based signature formulation (explode → groupBy partial min):
-    * kept for cross-checking the native expression and for engines where
-    * custom expressions are unavailable.
-    */
-  def minhashSignaturesAgg(df: DataFrame, textCol: String, idCol: String,
-                           n: Int = 3, k: Int = 32): DataFrame = {
-    val sh = df.select(col(idCol).as("doc"),
-        explode(TextFunctions.shingles(col(textCol), n)).as("s0"))
-      .select(col("doc"), xxhash64(col("s0")).as("h"))
-    val minima = (0 until k).map(i =>
-      min(xxhash64(col("h"), lit(i))).as(s"h$i"))
-    sh.groupBy("doc")
-      .agg(minima.head, minima.tail: _*)
-      .select(col("doc"), array((0 until k).map(i => col(s"h$i")): _*).as("sig"))
-  }
-
   /** (doc, sig, band, bucket) rows from a `(doc, sig)` signature frame —
     * THE band-hash definition, single home: the self-join
     * ([[minhashLshPairs]]), the observability report

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming layer (SURVEY.md §2.11 / §7 layer 6).
   *
@@ -14,10 +13,6 @@ import org.apache.spark.sql.types.StructType
   * latest-file-selection + archive-compare machinery.
   */
 object EventStreams {
-
-  /** File-arrival stream over a directory of parquet drops. */
-  def fileStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
 
   /** Hourly tumbling-window counts/sums per event type with a watermark
     * for late data. Append-mode compatible.

@@ -42,14 +42,13 @@ class EngineSizingSpec extends SparkSpec {
       assert(allBytes > 0, s"$scale: no input found")
       assert(graft.operators.Partitioning.scanFootprint(dir.toString)._2 == allBytes, scale)
       for (cpus <- Seq(1, 4, 32))
-        assert(Engine.initialShufflePartitions(cpus, dir.toString,
-          Knobs.parse(Map.empty)) == Engine.sizeInitialPartitions(cpus, allBytes),
+        assert(Engine.initialShufflePartitions(cpus, dir.toString) ==
+          Engine.sizeInitialPartitions(cpus, allBytes),
           s"$scale at $cpus cpus")
     }
   }
 
   test("directory helper floors to cpus when the dir is missing") {
-    assert(Engine.initialShufflePartitions(16, "/nonexistent-graft-dir",
-      Knobs.parse(Map.empty)) == 16)
+    assert(Engine.initialShufflePartitions(16, "/nonexistent-graft-dir") == 16)
   }
 }
